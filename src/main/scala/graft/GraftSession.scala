@@ -19,6 +19,21 @@ import graft.functions.{CharNgramHashes, DotProduct, L1Distance, MinHashSig,
  * Scale defaults: AQE on (runtime re-planning + skew-join splitting),
  * shuffle partitions sized by the caller (32 locally; on a cluster,
  * 2-3× total cores), UTC session time.
+ *
+ * Generated-code cache: Catalyst keys its compiled classes by source text
+ * in a JVM-wide cache of `spark.sql.codegen.cache.maxEntries` entries
+ * (Spark's default: 100). A perfbench `streaming` JVM (rounds of a
+ * [[graft.streaming.MaterializedView]] commit plus a
+ * [[graft.streaming.JoinMv]] batch) compiles 176 distinct generated
+ * classes, and one that also runs the heavy board queries (`board_heavy`)
+ * 323. At 100 entries the LRU evicts a round's classes before the next
+ * round needs them, so every steady-state round recompiled ~160 classes
+ * with Janino (perfbench `streaming` on 4 cores: 9.9 s median round
+ * latency, 6.4 s without the recompiles). [[CodegenCacheEntries]] keeps
+ * several times the measured working set resident; steady-state rounds
+ * then compile nothing. The setting is static: it takes effect only if
+ * this builder creates the JVM's first session (before anything touches
+ * Catalyst's code generator).
  */
 object GraftSession {
 
@@ -117,6 +132,10 @@ object GraftSession {
         spark, fn.name, fn.checked)
     }
 
+  /** Generated classes kept compiled per JVM: about 6× the 323 measured
+    * for streaming plus the heavy board in one JVM (see the object doc). */
+  val CodegenCacheEntries = 2000
+
   def builder(appName: String = "graft",
       master: String = "local[*]",
       shufflePartitions: Int = 32): SparkSession.Builder =
@@ -124,6 +143,7 @@ object GraftSession {
       .appName(appName)
       .master(master)
       .config("spark.sql.extensions", classOf[Extensions].getName)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", true)

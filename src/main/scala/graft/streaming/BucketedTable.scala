@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /**
  * Key-hash-bucketed parquet table with per-bucket replacement — the storage
@@ -33,9 +34,18 @@ object BucketedTable {
     pmod(xxhash64(keys: _*), lit(nBuckets.toLong)).cast("int")
 
   /** Distinct bucket ids present in `df` (bounded by nBuckets, so the
-    * collect is a fixed-size metadata fetch, not a data read). */
+    * collect is a fixed-size metadata fetch, not a data read). One job and
+    * no shuffle: each task folds its partition's ids into a set and the
+    * driver unions the sets — `distinct()` would plan an exchange, which
+    * AQE runs as a job of its own ahead of the collect. */
   def touchedBuckets(df: DataFrame): Seq[Int] =
-    df.select(BucketCol).distinct().collect().map(_.getInt(0)).toSeq.sorted
+    df.select(col(BucketCol)).queryExecution.toRdd
+      .mapPartitions { rows =>
+        val seen = scala.collection.mutable.HashSet.empty[Int]
+        rows.foreach(r => seen += r.getInt(0))
+        Iterator.single(seen.toArray)
+      }
+      .collect().flatten.distinct.sorted.toSeq
 
   /** Pin a table root's bucket count: first caller records `n` in a
     * `_n_buckets` sidecar, later callers are checked against it. A bucket
@@ -84,12 +94,81 @@ object BucketedTable {
     }
   }
 
+  /** Sidecar in the table root holding the table's schema as JSON, pinned
+    * by the first [[swapTouched]] (the `_` prefix hides it from Spark's
+    * file listing). */
+  val SchemaFile = "_schema"
+
+  /** A schema's column names and types, order and nullability dropped —
+    * parquet round-trips legitimately widen nullability, and a union by
+    * name may reorder columns. */
+  private[streaming] def shape(s: StructType): Seq[(String, String)] =
+    s.fields.map(f => f.name -> f.dataType.catalogString).sortBy(_._1).toSeq
+
+  /** The schema pinned for the table at `path`, if any (a table written
+    * before schemas were pinned has none until its next swap). */
+  def pinnedSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val p = new Path(path, SchemaFile)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(DataType.fromJson(new String(in.readAllBytes(), "UTF-8"))
+        .asInstanceOf[StructType])
+      finally in.close()
+    }
+  }
+
+  /** Fail loudly if `schema` (a batch's, or a frame about to be swapped
+    * in) drifts from the schema pinned at `path`: a column added, dropped,
+    * renamed or retyped. Without this a retyped column would land in the
+    * touched buckets only, leaving a table whose files disagree on the
+    * column's type. No-op for a table with no pinned schema. */
+  def checkSchema(spark: SparkSession, path: String, schema: StructType): Unit =
+    pinnedSchema(spark, path).foreach(requireMatch(path, _, schema))
+
+  private def requireMatch(path: String, pinned: StructType,
+      schema: StructType): Unit =
+    if (shape(pinned) != shape(schema))
+      throw new IllegalStateException(
+        s"schema drift on bucketed table $path: pinned " +
+          s"${shape(pinned).mkString(", ")} vs incoming " +
+          s"${shape(schema).mkString(", ")}; rebuild the table to change " +
+          "its schema")
+
+  /** Record `schema` as the table's schema, in the column order a parquet
+    * read returns (data columns, then the bucket partition column). Staged
+    * and renamed, so a crash leaves either no sidecar or a whole one. */
+  private def pinSchema(fs: org.apache.hadoop.fs.FileSystem, path: String,
+      schema: StructType): Unit = {
+    val p = new Path(path, SchemaFile)
+    val readOrder = StructType(schema.fields.filterNot(_.name == BucketCol) ++
+      schema.fields.find(_.name == BucketCol))
+    fs.mkdirs(p.getParent)
+    val tmp = new Path(path, s".${SchemaFile}_tmp_${java.util.UUID.randomUUID()}")
+    val out = fs.create(tmp, true)
+    try out.write(readOrder.json.getBytes("UTF-8")) finally out.close()
+    if (!fs.rename(tmp, p)) {
+      fs.delete(tmp, false)
+      throw new IllegalStateException(s"could not record $p")
+    }
+  }
+
   /** Current contents of the touched buckets only — a partition-pruned scan
     * (the `__bucket` predicate eliminates directories before I/O). None if
     * the table has no buckets yet. A target holding NON-bucketed parquet
     * (the flat whole-table layout) is rejected loudly: merging over it
     * would silently ignore every existing row and leave a mixed directory
-    * no reader can parse. */
+    * no reader can parse.
+    *
+    * Schema contract: the scan uses the schema [[swapTouched]] pinned in
+    * the [[SchemaFile]] sidecar, so no read runs parquet schema inference
+    * (a one-task Spark job per read). Every later swap is checked against
+    * the pinned schema by name and type (not nullability), so the pinned
+    * schema always describes every file in the table; a drifted frame
+    * fails in [[swapTouched]] before anything is written. A table written
+    * before schemas were pinned is read with inference until its next
+    * swap pins one. */
   def readTouched(spark: SparkSession, path: String, touched: Seq[Int]): Option[DataFrame] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -109,8 +188,12 @@ object BucketedTable {
         s"$path holds a non-bucketed parquet layout; bucketed upsert would " +
           "silently drop it. Migrate the table or use the whole-table sink (nBuckets <= 1).")
     if (!hasBuckets) None
-    else Some(spark.read.parquet(path).filter(col(BucketCol).isin(touched: _*)))
+    else Some(read(spark, path).filter(col(BucketCol).isin(touched: _*)))
   }
+
+  /** The whole table, read under its pinned schema when it has one. */
+  private def read(spark: SparkSession, path: String): DataFrame =
+    pinnedSchema(spark, path).fold(spark.read)(spark.read.schema).parquet(path)
 
   /** Reconcile an interrupted swap's trash, for LATEST-WINS merges (all
     * [[readTouched]]-then-[[swapTouched]] callers except additive ones —
@@ -189,7 +272,9 @@ object BucketedTable {
     * caller derives both from the same frame) by staging a partitioned write
     * and renaming each touched bucket directory into place. A bucket whose
     * new content is empty is dropped. Untouched bucket directories are not
-    * modified in any way — their files stay byte-identical. */
+    * modified in any way — their files stay byte-identical. The first swap
+    * pins `df`'s schema ([[SchemaFile]]); a later `df` whose schema drifts
+    * from it fails here, before any of it is staged. */
   def swapTouched(df: DataFrame, path: String, touched: Seq[Int]): Unit = {
     val spark = df.sparkSession
     val target = new Path(path)
@@ -203,6 +288,10 @@ object BucketedTable {
     // still not run over unreconciled trash). Upsert callers already
     // reconciled through readTouched, BEFORE their merge basis was read.
     reconcileTrash(fs, path)
+    pinnedSchema(spark, path) match {
+      case Some(pinned) => requireMatch(path, pinned, df.schema)
+      case None => pinSchema(fs, path, df.schema)
+    }
 
     fs.delete(stage, true)
     df.write.mode(SaveMode.Overwrite).partitionBy(BucketCol).parquet(stage.toString)
@@ -267,7 +356,7 @@ object BucketedTable {
       .map(_.getPath.getName.stripPrefix(s"$BucketCol=").toInt)
       .sorted
     if (crowded.isEmpty) return Nil
-    val merged = spark.read.parquet(path)
+    val merged = read(spark, path)
       .filter(col(BucketCol).isin(crowded: _*))
       // one task per bucket → one part-file per bucket directory
       .repartition(crowded.length, col(BucketCol))

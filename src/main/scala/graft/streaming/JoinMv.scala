@@ -213,6 +213,13 @@ object JoinMv {
     pinBucketCount(spark, basePath, nBuckets)
     val marker = new Path(mvPath, "_applied_batch")
     if (readMarker(fs, marker) >= batchId) return // full replay of a done batch
+    // a drifted batch fails before either side writes: the left and right
+    // chains commit concurrently, so a drift only one chain's swap caught
+    // would leave the other side's table already changed
+    val bucketField = org.apache.spark.sql.types.StructField(
+      BucketCol, org.apache.spark.sql.types.IntegerType)
+    checkSchema(spark, leftPath, batchA.schema.add(bucketField))
+    checkSchema(spark, rightPath, batchB.schema.add(bucketField))
 
     val acc = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
     // A/B compactions are independent — run them as two concurrent jobs
@@ -321,7 +328,10 @@ object JoinMv {
         afterOnLane(fSwap)(_ => newLMat.release())
       }
 
-      def rightChain(): Unit = phased(acc, "right_upsert") {
+      // returns dB's bucket set: the keys' buckets in `right` are also the
+      // index buckets affected_keys looks dB's keys up in (same bucketOf
+      // over the same values)
+      def rightChain(): Seq[Int] = phased(acc, "right_upsert") {
         val touchedR = touchedBuckets(dB)
         val curR = readTouched(spark, rightPath, touchedR).getOrElse(dB.limit(0))
         val unionR = curR.unionByName(dB)
@@ -331,13 +341,14 @@ object JoinMv {
           .select(col("__r.*"))
           .filter(col(opB) =!= "delete")
         if (touchedR.nonEmpty) swapTouched(newR, rightPath, touchedR)
+        touchedR
       }
 
       import scala.concurrent.Await
       import scala.concurrent.duration.Duration
       // if rightChain fails, the surviving left chain's swap must still
       // be awaited before the failure surfaces (no orphan writer)
-      val (fLeftSwap, _) = inParallel(leftChain(), rightChain(),
+      val (fLeftSwap, touchedR) = inParallel(leftChain(), rightChain(),
         cleanupA = (f: scala.concurrent.Future[Unit]) => {
           Await.ready(f, Duration.Inf)
           // the batch is already failing on the right side; don't let a
@@ -354,10 +365,7 @@ object JoinMv {
       // in-flight left swap
       val affectedMat =
         try phased(acc, "affected_keys") {
-          val dBKeyBuckets = touchedBuckets(
-            dB.select(col(pkB)).withColumn(BucketCol,
-              bucketOf(Seq(col(pkB)), nBuckets)))
-          val fromB = readTouched(spark, idxPath, dBKeyBuckets)
+          val fromB = readTouched(spark, idxPath, touchedR)
             .map(_.join(dB.select(col(pkB).as("__fk")), Seq("__fk"), "left_semi")
               .select(col("__pk").as("__k")))
             .getOrElse(dA.limit(0).select(col(pkA).as("__k")))

@@ -85,8 +85,7 @@ final class MaterializedView private (
     val fs = p.getFileSystem(conf)
     if (!fs.exists(p) || fs.listStatus(p).isEmpty) return
     def shape(s: org.apache.spark.sql.types.StructType) =
-      s.fields.filterNot(_.name == BucketedTable.BucketCol)
-        .map(f => f.name -> f.dataType.simpleString).sortBy(_._1).toSeq
+      BucketedTable.shape(s).filterNot(_._1 == BucketedTable.BucketCol)
     val existingSchema =
       try v.sparkSession.read.parquet(targetPath).schema
       catch {

@@ -97,12 +97,14 @@ object UpsertSink {
       reliable: Boolean = false): Unit = {
     import BucketedTable._
     val spark = batch.sparkSession
+    val bucketed = batch.withColumn(BucketCol, bucketOf(keys.map(col), nBuckets))
+    // a drifted batch fails before it runs a job, with the table untouched
+    checkSchema(spark, targetPath, bucketed.schema)
     // materialize once: the bucket-set collect AND the merge both read the
     // batch; without this the batch's full lineage executes twice.
     // reliable=true survives executor loss mid-batch (graft.Lineage); the
     // spill is fully consumed within this call, so it is released on exit.
-    val batchM = graft.Lineage.truncate(
-      batch.withColumn(BucketCol, bucketOf(keys.map(col), nBuckets)), reliable)
+    val batchM = graft.Lineage.truncate(bucketed, reliable)
     try {
       val batchB = batchM.df
       val touched = touchedBuckets(batchB)

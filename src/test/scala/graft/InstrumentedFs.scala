@@ -150,8 +150,12 @@ object InstrumentedFs {
   def matchedOps: Long = matched.get
   def isDead: Boolean = dead.get
   /** Revive after a crash without clearing counters — the "restarted
-    * process" seam for recovery assertions. */
-  def revive(): Unit = { dead.set(false); matcher = None }
+    * process" seam for recovery assertions. The matcher is disarmed
+    * BEFORE the process comes back to life: a task of the crashed attempt
+    * that is still being killed could otherwise pass the liveness check
+    * and match again in between, killing the restarted process mid-
+    * recovery. */
+  def revive(): Unit = { matcher = None; dead.set(false) }
 
   def reset(): Unit = {
     counters.clear(); listingCalls.set(0)

@@ -44,12 +44,9 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", true)
+  /** The production session config (codegen cache, extensions, AQE,
+    * parquet settings), with the web UI off for the test JVM. */
+  lazy val session: SparkSession = GraftSession.builder("graft-test", "local[4]", 4)
     .config("spark.ui.enabled", false)
     .getOrCreate()
 }
