@@ -34,6 +34,22 @@ import graft.functions.{CharNgramHashes, DotProduct, L1Distance, MinHashSig,
  * then compile nothing. The setting is static: it takes effect only if
  * this builder creates the JVM's first session (before anything touches
  * Catalyst's code generator).
+ *
+ * Local file system: without the native `libhadoop`, which Spark's jars do
+ * not ship, Hadoop's `RawLocalFileSystem.setPermission` forks a `chmod`
+ * process, and Hadoop calls it for every file it creates with a permission
+ * and every directory it makes: three forks per parquet part file (its
+ * bucket directory, the file, its `.crc`), plus the streaming checkpoint's
+ * offset and commit files through `FileContext`. A perfbench `streaming`
+ * run (4 rounds) forked 1,781 `chmod`s, 490–550 in each steady-state
+ * round; the heavy board queries 63. The builder points both of Hadoop's
+ * `file` schemes (`fs.file.impl`, `fs.AbstractFileSystem.file.impl`) at
+ * [[ForkFreeLocalFileSystem]] and [[ForkFreeLocalFs]], which set the same
+ * modes through `java.nio` and still write and verify `.crc` checksums; a
+ * `streaming` run then forks none. Like the codegen cache size, this takes
+ * effect only if graft's session creates the JVM's first `file://`
+ * `FileSystem`: Hadoop caches file systems by scheme and user, not by
+ * configuration.
  */
 object GraftSession {
 
@@ -144,6 +160,9 @@ object GraftSession {
       .master(master)
       .config("spark.sql.extensions", classOf[Extensions].getName)
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
+      .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[ForkFreeLocalFs].getName)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", true)

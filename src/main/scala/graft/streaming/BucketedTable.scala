@@ -303,14 +303,19 @@ object BucketedTable {
       val dst = new Path(target, s"$BucketCol=$b")
       val src = new Path(stage, s"$BucketCol=$b")
       // old content renamed out (readable until the instant of its swap),
-      // new content renamed in; both renames are metadata-atomic. If the
-      // rename-in fails, put the old bucket back before surfacing.
+      // new content renamed in; both renames are metadata-atomic. A refused
+      // rename-out stops here: a rename-in onto the still-present bucket
+      // would nest the new bucket inside the old one. If the rename-in
+      // fails, put the old bucket back before surfacing.
       val displaced = new Path(trash, b.toString)
-      if (fs.exists(dst)) fs.rename(dst, displaced)
-      if (fs.exists(src) && !fs.rename(src, dst)) {
-        if (fs.exists(displaced)) fs.rename(displaced, dst)
+      if (fs.exists(dst) && !fs.rename(dst, displaced))
         throw new IllegalStateException(
-          s"failed to publish bucket $b of $path; old content restored")
+          s"failed to move bucket $b of $path aside; its content is unchanged")
+      if (fs.exists(src) && !fs.rename(src, dst)) {
+        val restored = !fs.exists(displaced) || fs.rename(displaced, dst)
+        throw new IllegalStateException(s"failed to publish bucket $b of $path; " +
+          (if (restored) "old content restored"
+           else s"old content left at $displaced for the next swap to restore"))
       }
     }
     fs.delete(trash, true)

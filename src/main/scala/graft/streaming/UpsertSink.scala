@@ -75,10 +75,21 @@ object UpsertSink {
 
     fs.delete(stage, true)
     alive.write.mode(SaveMode.Overwrite).parquet(stage.toString)
-    // atomic publish: old snapshot readable until the rename lands
+    // atomic publish: old snapshot readable until the rename lands. A
+    // refused rename must stop the swap: renaming the stage onto a target
+    // that is still there nests it INSIDE the target, and deleting __old
+    // after a refused publish deletes the only copy of the snapshot.
     fs.delete(old, true)
-    if (fs.exists(target)) fs.rename(target, old)
-    fs.rename(stage, target)
+    val hadTarget = fs.exists(target)
+    if (hadTarget && !fs.rename(target, old))
+      throw new IllegalStateException(
+        s"could not move $target aside to $old; the snapshot is unchanged")
+    if (!fs.rename(stage, target)) {
+      val restored = !hadTarget || fs.rename(old, target)
+      throw new IllegalStateException(s"could not publish $stage to $target; " +
+        (if (restored) "the previous snapshot is restored"
+         else s"the previous snapshot is at $old, restored by the next upsert"))
+    }
     fs.delete(old, true)
   }
 

@@ -3,7 +3,7 @@ package graft
 import java.net.URI
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 
-import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileStatus, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileStatus, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 
@@ -19,7 +19,9 @@ import org.apache.hadoop.util.Progressable
  *      that run arbitrary side effects at an exact interleaving point, a
  *      `setTimes` silent no-op mode (object-store behavior), and
  *      count-limited listing HIDING (a readdir racing a sibling's deletes
- *      can miss a stable entry — hide it from the first N listings).
+ *      can miss a stable entry — hide it from the first N listings), and
+ *      one-shot rename REFUSAL (`rename` returns false, as a file system
+ *      reports a rename it did not do).
  *   3. **Crash enumeration**: arm a matcher + trip point; once the Nth
  *      matching operation fires, it and EVERY subsequent call throw
  *      [[InstrumentedFs.InjectedCrash]] — the process is "dead" from that
@@ -30,7 +32,7 @@ import org.apache.hadoop.util.Progressable
  * State is static (the Hadoop FileSystem cache hands out one instance per
  * scheme); specs call [[InstrumentedFs.reset]] around each scenario.
  */
-class InstrumentedFs extends RawLocalFileSystem {
+class InstrumentedFs extends ForkFreeRawLocalFileSystem {
   import InstrumentedFs._
 
   override def getUri: URI = URI.create("ifs:///")
@@ -77,7 +79,7 @@ class InstrumentedFs extends RawLocalFileSystem {
     gate("delete", f) { super.delete(f, recursive) }
 
   override def rename(src: Path, dst: Path): Boolean =
-    gate("rename", src) { super.rename(src, dst) }
+    gate("rename", src) { !refused(src) && super.rename(src, dst) }
 
   override def mkdirs(f: Path): Boolean =
     gate("mkdirs", f) { super.mkdirs(f) }
@@ -120,6 +122,19 @@ object InstrumentedFs {
     hiddenNames.set(names); hideFromFirstListings.set(listings)
   }
 
+  private val refusals = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  /** One-shot: the next `rename` whose source path ends with `srcSuffix`
+    * returns false and leaves both paths as they are. */
+  def refuseRename(srcSuffix: String): Unit = refusals.add(srcSuffix)
+
+  private def refused(src: Path): Boolean = {
+    val s = src.toString
+    val it = refusals.iterator()
+    var hit = false
+    while (!hit && it.hasNext) if (s.endsWith(it.next())) { it.remove(); hit = true }
+    hit
+  }
+
   private final case class Hook(op: String, pathContains: String,
       action: () => Unit)
   private val hooks =
@@ -130,8 +145,9 @@ object InstrumentedFs {
   def beforeOp(op: String, pathContains: String)(action: => Unit): Unit =
     hooks.add(Hook(op, pathContains, () => action))
 
-  /** Hooks not yet consumed — lets a spec assert its injection FIRED. */
-  def pendingHooks: Int = hooks.size()
+  /** Hooks and refusals not yet consumed — lets a spec assert its
+    * injection FIRED. */
+  def pendingHooks: Int = hooks.size() + refusals.size()
 
   // ---- crash enumeration ----
   @volatile private var matcher: Option[(String, String) => Boolean] = None
@@ -161,7 +177,7 @@ object InstrumentedFs {
     counters.clear(); listingCalls.set(0)
     setTimesNoop.set(false)
     hiddenNames.set(Set.empty); hideFromFirstListings.set(0)
-    hooks.clear()
+    hooks.clear(); refusals.clear()
     matcher = None; tripAt.set(Long.MaxValue)
     matched.set(0); dead.set(false)
   }
