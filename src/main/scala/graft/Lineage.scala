@@ -52,13 +52,14 @@ import org.apache.spark.storage.StorageLevel
 object Lineage {
 
   /** A lineage-truncated frame plus its cleanup. `release()` is idempotent
-    * and frees the materialization: the localCheckpoint path unpersists
-    * the checkpoint blocks (a later read of `df` fails — the lineage
-    * behind them is gone), the durable path deletes the spill directory —
-    * call it only once every read of `df` has completed. */
+    * (also across threads: the first call wins) and frees the
+    * materialization: the localCheckpoint path unpersists the checkpoint
+    * blocks (a later read of `df` fails — the lineage behind them is
+    * gone), the durable path deletes the spill directory — call it only
+    * once every read of `df` has completed. */
   final class Materialized(val df: DataFrame, cleanup: () => Unit) {
-    private var released = false
-    def release(): Unit = if (!released) { released = true; cleanup() }
+    private val released = new java.util.concurrent.atomic.AtomicBoolean(false)
+    def release(): Unit = if (released.compareAndSet(false, true)) cleanup()
   }
 
   /** Per-SparkContext queue of localCheckpoint RDDs created by [[truncate]]

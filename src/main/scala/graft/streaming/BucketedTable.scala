@@ -24,6 +24,16 @@ import org.apache.spark.sql.types.{DataType, StructType}
  * visibility contract TiFlink's per-region 2PC gives between regions; whole-
  * table snapshot isolation is layered on top by [[SnapshotStore]]'s pointer
  * flip when required.
+ *
+ * One file per bucket. The writers hand [[swapTouched]] frames clustered by
+ * `__bucket` (their merge shuffles on it, or they repartition on it before
+ * the write), so each bucket's rows sit in one task and every bucket
+ * directory holds exactly one part-file. A per-(task, bucket) layout wrote
+ * up to tasks × buckets small files a swap, and both the write (a parquet
+ * writer's setup and close) and every later read (a file open each) pay
+ * per file. The trade-off: a swap's write parallelism equals the number of
+ * buckets it touches, not the session's shuffle width — the same choice
+ * [[compact]] makes, and sized by `nBuckets`.
  */
 object BucketedTable {
 
@@ -37,7 +47,9 @@ object BucketedTable {
     * collect is a fixed-size metadata fetch, not a data read). One job and
     * no shuffle: each task folds its partition's ids into a set and the
     * driver unions the sets — `distinct()` would plan an exchange, which
-    * AQE runs as a job of its own ahead of the collect. */
+    * AQE runs as a job of its own ahead of the collect. Where the frame is
+    * materialized anyway, [[truncateObserving]] gets the same set from the
+    * materializing job instead, with no job of its own. */
   def touchedBuckets(df: DataFrame): Seq[Int] =
     df.select(col(BucketCol)).queryExecution.toRdd
       .mapPartitions { rows =>
@@ -46,6 +58,26 @@ object BucketedTable {
         Iterator.single(seen.toArray)
       }
       .collect().flatten.distinct.sorted.toSeq
+
+  /** `graft.Lineage.truncate(df, reliable)` plus, for each of `sets`, the
+    * sorted distinct int values it takes over `df` — typically bucket ids,
+    * `col(BucketCol)` or a [[bucketOf]] over another key. The sets are
+    * `collect_set` observations riding the job that materializes the frame
+    * (a frame read back only to learn its bucket set costs a job per
+    * call), so they must stay small: bucket ids are bounded by nBuckets. */
+  def truncateObserving(df: DataFrame, reliable: Boolean,
+      sets: Column*): (graft.Lineage.Materialized, Seq[Seq[Int]]) = {
+    require(sets.nonEmpty, "nothing to observe")
+    val obs = org.apache.spark.sql.Observation()
+    val named = sets.indices.map(i => collect_set(sets(i)).as(s"__set$i"))
+    val m = graft.Lineage.truncate(
+      df.observe(obs, named.head, named.tail: _*), reliable)
+    try {
+      val got = obs.get
+      (m, sets.indices.map(i =>
+        got(s"__set$i").asInstanceOf[scala.collection.Seq[Int]].toSeq.sorted))
+    } catch { case t: Throwable => m.release(); throw t }
+  }
 
   /** Pin a table root's bucket count: first caller records `n` in a
     * `_n_buckets` sidecar, later callers are checked against it. A bucket
@@ -154,41 +186,68 @@ object BucketedTable {
     }
   }
 
-  /** Current contents of the touched buckets only — a partition-pruned scan
-    * (the `__bucket` predicate eliminates directories before I/O). None if
-    * the table has no buckets yet. A target holding NON-bucketed parquet
-    * (the flat whole-table layout) is rejected loudly: merging over it
-    * would silently ignore every existing row and leave a mixed directory
-    * no reader can parse.
+  /** Current contents of the touched buckets only: `open(...).read(touched)`.
+    * None if the table has none of them. */
+  def readTouched(spark: SparkSession, path: String, touched: Seq[Int]): Option[DataFrame] =
+    open(spark, path).read(touched)
+
+  /** A bucketed table resolved for reading: its trash reconciled, its
+    * layout checked, its bucket directories listed and its pinned schema
+    * loaded — all at [[open]], on the caller's thread. [[read]] then
+    * touches nothing but the named `__bucket=b` directories: it neither
+    * lists the table root nor reconciles trash, so a reader running while
+    * another thread swaps OTHER buckets of the same table can neither list
+    * a bucket that swap has between its two renames nor "restore" it from
+    * the trash. The listing is a snapshot: buckets swapped after [[open]]
+    * must be re-opened, which a caller that reads a bucket only before it
+    * swaps it, or reads only buckets no one swaps, never needs. */
+  final class Opened private[BucketedTable] (spark: SparkSession,
+      path: String, buckets: Set[Int], schema: Option[StructType]) {
+
+    /** The named buckets' rows, with the bucket column (None if none of
+      * them exists). No file is read and no job runs until an action. */
+    def read(touched: Seq[Int]): Option[DataFrame] = {
+      val present = touched.filter(buckets.contains).distinct
+      if (present.isEmpty) None
+      else Some(schema.fold(spark.read)(spark.read.schema)
+        .option("basePath", path)
+        .parquet(present.map(b => s"$path/$BucketCol=$b"): _*))
+    }
+  }
+
+  /** Resolve the table at `path` for reading ([[Opened]]). The trash is
+    * reconciled BEFORE the bucket listing: the canonical crash replay
+    * re-delivers the batch that displaced a bucket, and a merge basis
+    * captured without that bucket's rows would compute batch-only content
+    * and overwrite the restored bucket with it — silent loss of every
+    * prior key in the bucket (reconciling inside swapTouched alone runs
+    * AFTER every caller has already read). A target holding NON-bucketed
+    * parquet (the flat whole-table layout) is rejected loudly: merging over
+    * it would silently ignore every existing row and leave a mixed
+    * directory no reader can parse.
     *
-    * Schema contract: the scan uses the schema [[swapTouched]] pinned in
-    * the [[SchemaFile]] sidecar, so no read runs parquet schema inference
-    * (a one-task Spark job per read). Every later swap is checked against
-    * the pinned schema by name and type (not nullability), so the pinned
+    * Schema contract: reads use the schema [[swapTouched]] pinned in the
+    * [[SchemaFile]] sidecar, so no read runs parquet schema inference (a
+    * one-task Spark job per read). Every later swap is checked against the
+    * pinned schema by name and type (not nullability), so the pinned
     * schema always describes every file in the table; a drifted frame
     * fails in [[swapTouched]] before anything is written. A table written
     * before schemas were pinned is read with inference until its next
     * swap pins one. */
-  def readTouched(spark: SparkSession, path: String, touched: Seq[Int]): Option[DataFrame] = {
+  def open(spark: SparkSession, path: String): Opened = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // reconcile BEFORE the read snapshots the file index: the canonical
-    // crash replay re-delivers the batch that displaced a bucket, and a
-    // merge basis captured without that bucket's rows would compute
-    // batch-only content and overwrite the restored bucket with it —
-    // silent loss of every prior key in the bucket (reconciling inside
-    // swapTouched alone runs AFTER every caller has already read)
     reconcileTrash(fs, path)
-    if (!fs.exists(p)) return None
-    val children = fs.listStatus(p).map(_.getPath.getName)
-    val hasBuckets = children.exists(_.startsWith(s"$BucketCol="))
-    val hasFlat = children.exists(n => n.endsWith(".parquet") && !n.startsWith("."))
-    if (hasFlat)
+    val children =
+      if (fs.exists(p)) fs.listStatus(p).map(_.getPath.getName).toSeq else Nil
+    if (children.exists(n => n.endsWith(".parquet") && !n.startsWith(".")))
       throw new IllegalStateException(
         s"$path holds a non-bucketed parquet layout; bucketed upsert would " +
           "silently drop it. Migrate the table or use the whole-table sink (nBuckets <= 1).")
-    if (!hasBuckets) None
-    else Some(read(spark, path).filter(col(BucketCol).isin(touched: _*)))
+    val buckets = children.filter(_.startsWith(s"$BucketCol="))
+      .flatMap(_.stripPrefix(s"$BucketCol=").toIntOption).toSet
+    new Opened(spark, path, buckets,
+      if (buckets.isEmpty) None else pinnedSchema(spark, path))
   }
 
   /** The whole table, read under its pinned schema when it has one. */
@@ -286,7 +345,7 @@ object BucketedTable {
     // readTouched first — [[compact]] is one (its merge basis is safe: a
     // displaced bucket cannot enter its crowded set, but its swap must
     // still not run over unreconciled trash). Upsert callers already
-    // reconciled through readTouched, BEFORE their merge basis was read.
+    // reconciled through open/readTouched, BEFORE their merge basis was read.
     reconcileTrash(fs, path)
     pinnedSchema(spark, path) match {
       case Some(pinned) => requireMatch(path, pinned, df.schema)

@@ -54,14 +54,15 @@ object IncrementalMv {
       .agg(max_by(struct(batch.columns.toIndexedSeq.map(col): _*), col(version)).as("__r"))
       .select(col("__r.*"))
       .withColumn(BucketCol, bucketOf(Seq(col(pk)), nBuckets))
-    // materialized once: the bucket collect, the diff, and the entity
-    // union all read it — without this the compaction shuffle runs 3×.
+    // materialized once (its bucket set observed on the way): the diff
+    // and the entity union both read it — without this the compaction
+    // shuffle runs twice.
     // reliable=true survives executor loss mid-batch (graft.Lineage); the
     // spill is fully consumed within this call → released on exit.
-    val compactedMat = graft.Lineage.truncate(compacted, reliable)
+    val (compactedMat, Seq(touchedEntity)) =
+      truncateObserving(compacted, reliable, col(BucketCol))
     try {
     val compactedM = compactedMat.df
-    val touchedEntity = touchedBuckets(compactedM)
 
     // 2. diff against the current entity rows of the touched buckets only
     val current = readTouched(spark, entityPath, touchedEntity)

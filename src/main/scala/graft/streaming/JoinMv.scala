@@ -24,31 +24,63 @@ import org.apache.spark.sql.functions._
  *   - `right`       dim rows, latest per `pkB`, bucketed by pkB
  *   - `mv`          joined output, keyed/bucketed by pkA
  *
- * Per batch: compact each side to one final change per key, upsert both
- * entity tables and the index (touched buckets only), derive the affected
- * output keys as ΔA.pk ∪ index⁻¹(ΔB.pk), re-join JUST those fact rows
- * against the current dim buckets they reference, diff against the
- * current MV rows, emit an I/U/D changelog, and swap the touched MV
- * buckets. Work per batch ∝ |ΔA| + |ΔB| + |affected| + the buckets they
- * hash into — never table-sized. An update that MOVES a fact row between
- * fk values retracts the old index entry (its old bucket) and inserts the
- * new one, so both dim sides see it correctly forever after.
+ * Per batch, as a DAG of concurrent lanes (each step below is a lane that
+ * starts as soon as what it reads is ready):
+ *   1. materialize both raw batches with their bucket column, observing
+ *      the bucket sets on the way (no job of their own). There is no
+ *      per-batch compaction: every consumer is either a latest-version-wins
+ *      `max_by` merge, which already yields one row per key, or a semi-/
+ *      anti-join, where a key present twice matches the same rows.
+ *   2. affected output keys ΔA.pk ∪ index⁻¹(ΔB.pk), read from the PRE-swap
+ *      index, beside the merges: a fact whose fk moves is in ΔA either way,
+ *      and every other entry is the same before and after the swap.
+ *   3. `left` and `right` merge the touched buckets with the batch into
+ *      materialized frames; the pre-swap (fk, pk) of ΔA's keys is
+ *      snapshotted from the same pre-swap files.
+ *   4. swaps, in lanes: `right`; and the index (retract ΔA's old entries,
+ *      insert the new ones) followed by `left`.
+ *   5. at the same time, the MV rows of the affected keys are recomputed:
+ *      the fact and dim rows come from the merged frames for buckets this
+ *      batch touched and from disk for the buckets it did not touch —
+ *      buckets no swap of this batch renames, so the read is the same
+ *      whenever it runs. The new rows are diffed against the current MV
+ *      rows into an I/U/D changelog, and the touched MV buckets swap.
+ *   6. the `_applied_batch` marker, once every lane has finished.
+ * Work per batch ∝ |ΔA| + |ΔB| + |affected| + the buckets they hash into —
+ * never table-sized. Each bucket directory holds one file: the merges
+ * shuffle once on the bucket column, and the index and MV swaps
+ * repartition by it (the trade-off is in [[BucketedTable]]'s doc). With
+ * `reliable = true` the merged frames are read back from their spill
+ * files, which loses that clustering, so `left` and `right` buckets may
+ * then hold several files.
+ *
+ * Ordering rules, each kept by one await:
+ *   - the affected keys are materialized before the index swap renames a
+ *     bucket (they read the pre-swap index);
+ *   - the index swaps before `left` (below);
+ *   - the changelog is written before the MV swap, and guarded by its
+ *     directory's existence, so a replay after the swap skips it instead
+ *     of emitting a spurious empty diff;
+ *   - the marker lands after every swap.
+ * No read may race a swap: every table's trash is reconciled and its
+ * bucket directories listed once, on the calling thread, before any lane
+ * starts ([[BucketedTable.open]]); inside lanes only the named bucket
+ * directories are read, never the table root.
  *
  * Replay safety: entity/index upserts are idempotent (latest-version-wins
- * over content-addressed state); the changelog batch directory is written
- * (staged + atomic rename) BEFORE the MV swap and guarded by existence;
- * the `_applied_batch` marker lands after the MV swap. A replay at any
- * crash point recomputes correct state and skips what already committed —
- * same commit discipline as [[IncrementalMv]]. The index commits
- * STRICTLY BEFORE the left-entity swap: the pre-swap left table is the
- * only durable record of a moved fact's OLD fk, so the reverse ordering
- * let a crash in between leave that fact's old-fk entry (and a deleted
- * fact's whole entry) dangling FOREVER — never a wrong MV row (the MV
- * derives from entity state, not the index; a dangling entry only
+ * over content-addressed state) and the MV recompute derives from entity
+ * state alone, so a replay at any crash point recomputes correct state and
+ * skips what already committed — whichever swaps of the crashed attempt
+ * landed — with the same commit discipline as [[IncrementalMv]]. The index
+ * commits STRICTLY BEFORE the left-entity swap: the pre-swap left table is
+ * the only durable record of a moved fact's OLD fk, so the reverse
+ * ordering let a crash in between leave that fact's old-fk entry (and a
+ * deleted fact's whole entry) dangling FOREVER — never a wrong MV row (the
+ * MV derives from entity state, not the index; a dangling entry only
  * triggers a spurious recompute, and JoinMvSpec plants one to prove it),
  * but an unbounded stale-entry leak on fk-move/delete-heavy feeds that
- * inflates every later dim-fanout. With index-first, a replay from
- * either side of the boundary re-derives a correct retraction;
+ * inflates every later dim-fanout. With index-first, a replay from either
+ * side of the boundary re-derives a correct retraction;
  * JoinMvCrashSweepSpec enumerates every mutation point and asserts the
  * index mirrors the left table EXACTLY after replay.
  *
@@ -61,12 +93,14 @@ import org.apache.spark.sql.functions._
 object JoinMv {
   import BucketedTable._
 
-  /** Per-phase wall-clock (ms, insertion-ordered) of the LAST completed
+  /** Per-phase wall-clock (ms, in completion order) of the LAST completed
     * [[applyBatch]] in this JVM — the itemized commit choreography
     * StreamBench publishes so the per-batch floor is a read table, not a
-    * guess. Phases running concurrently (the A/B compactions; the
-    * left+index chain vs the right upsert) report their OWN spans, so the
-    * serial sum exceeds the batch wall time by design. */
+    * guess. Phases running concurrently report their OWN spans, so the
+    * serial sum exceeds the batch wall time by design. `compact_a` and
+    * `compact_b` time the materialization of the raw batches (the names
+    * are kept for the dashboards that read them), `right_upsert` the right
+    * merge and `right_swap` its swap. */
   @volatile var lastPhases: Seq[(String, Long)] = Nil
 
   private def phased[T](acc: java.util.concurrent.ConcurrentLinkedQueue[
@@ -119,19 +153,6 @@ object JoinMv {
     scala.concurrent.Future { pin(); body }(lanes)
   }
 
-  /** Run `body` on a lane thread after `f` completes — with the
-    * REGISTERING thread's props re-pinned first. A bare
-    * `andThen/foreach(...)(lanes)` callback runs with whatever stale job
-    * group the cached lane thread inherited at creation, so any Spark
-    * jobs the callback triggers (an unpersist, a checkpoint cleanup)
-    * would be attributable — and CANCELLABLE — under another stream's
-    * group: the exact bleed [[PropagatedProps]] exists to prevent. */
-  private def afterOnLane[T](f: scala.concurrent.Future[T])(
-      body: scala.util.Try[T] => Unit): scala.concurrent.Future[T] = {
-    val pin = capturePin()
-    f.andThen { case t => pin(); body(t) }(lanes)
-  }
-
   /** Run `a` and `b` as concurrent lanes, awaiting BOTH before returning
     * or throwing — a fail-fast await would surface one lane's failure
     * while the other is still mid-write, handing the caller's replay an
@@ -164,12 +185,22 @@ object JoinMv {
     }
   }
 
-  /** Latest row per `pk` within one batch. */
-  private def compact(batch: DataFrame, pk: String, ver: String): DataFrame =
-    batch.groupBy(col(pk))
-      .agg(max_by(struct(batch.columns.toIndexedSeq.map(col): _*), col(ver))
-        .as("__r"))
+  private def await[T](f: scala.concurrent.Future[T]): T =
+    scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
+
+  /** Latest-version-wins merge of `delta` into `cur` (the touched buckets'
+    * rows), tombstones dropped. One shuffle, on the bucket column: each
+    * bucket's rows land in one task, so a swap of the result writes one
+    * file per bucket (grouping by (bucket, pk) needs no second exchange). */
+  private def merged(cur: Option[DataFrame], delta: DataFrame, pk: String,
+      ver: String, op: String): DataFrame = {
+    val u = cur.fold(delta)(_.unionByName(delta))
+    u.repartition(col(BucketCol))
+      .groupBy(col(BucketCol), col(pk))
+      .agg(max_by(struct(u.columns.toIndexedSeq.map(col): _*), col(ver)).as("__r"))
       .select(col("__r.*"))
+      .filter(col(op) =!= "delete")
+  }
 
   private def readMarker(fs: org.apache.hadoop.fs.FileSystem, p: Path): Long =
     if (!fs.exists(p)) -1L
@@ -221,257 +252,230 @@ object JoinMv {
     checkSchema(spark, leftPath, batchA.schema.add(bucketField))
     checkSchema(spark, rightPath, batchB.schema.add(bucketField))
 
+    // every read below is of named bucket directories listed HERE, before
+    // any lane may swap one (see the object doc)
+    val left = open(spark, leftPath)
+    val idx = open(spark, idxPath)
+    val right = open(spark, rightPath)
+    val mv = open(spark, mvPath)
+
+    import scala.concurrent.{Future, Promise}
+    import graft.Lineage.Materialized
     val acc = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
-    // A/B compactions are independent — run them as two concurrent jobs
-    // (each is a fixed-latency shuffle+checkpoint; at small batches the
-    // scheduler round-trips dominate, so halving the serial job count is
-    // the lever, measured in STREAMBENCH's joinmv phase table)
-    val (dAMat, dBMat) = inParallel(
-      phased(acc, "compact_a")(graft.Lineage.truncate(
-        compact(batchA, pkA, verA)
-          .withColumn(BucketCol, bucketOf(Seq(col(pkA)), nBuckets)), reliable)),
-      phased(acc, "compact_b")(graft.Lineage.truncate(
-        compact(batchB, pkB, verB)
-          .withColumn(BucketCol, bucketOf(Seq(col(pkB)), nBuckets)), reliable)),
-      cleanupA = (m: graft.Lineage.Materialized) => m.release(),
-      cleanupB = (m: graft.Lineage.Materialized) => m.release())
+    // every materialization of the batch, released once all lanes are done
+    // (the merged frames earlier, when their last reader finishes)
+    val held = new java.util.concurrent.ConcurrentLinkedQueue[Materialized]()
+    def materialize(df: DataFrame, sets: org.apache.spark.sql.Column*)
+        : (Materialized, Seq[Seq[Int]]) = {
+      val out =
+        if (sets.isEmpty) (graft.Lineage.truncate(df, reliable), Nil)
+        else truncateObserving(df, reliable, sets: _*)
+      held.add(out._1)
+      out
+    }
+    /** Release `f`'s frame once every one of its `readers` has completed,
+      * successfully or not. */
+    def releaseWhenDone(f: Future[Option[Materialized]],
+        readers: Future[_]*): Unit = {
+      val n = new java.util.concurrent.atomic.AtomicInteger(readers.size)
+      readers.foreach(_.onComplete { _ =>
+        if (n.decrementAndGet() == 0)
+          f.value.flatMap(_.toOption).flatten.foreach(_.release())
+      }(lanes))
+    }
+
     try {
-      val dA = dAMat.df
-      val dB = dBMat.df
+      // the raw batches, each with its bucket column and bucket set; A also
+      // observes its fks' index buckets (where its new index entries land)
+      val (matA, matB) = inParallel(
+        phased(acc, "compact_a")(materialize(
+          batchA.withColumn(BucketCol, bucketOf(Seq(col(pkA)), nBuckets)),
+          col(BucketCol), bucketOf(Seq(col(fk)), nBuckets))),
+        phased(acc, "compact_b")(materialize(
+          batchB.withColumn(BucketCol, bucketOf(Seq(col(pkB)), nBuckets)),
+          col(BucketCol))))
+      val (dA, Seq(touchedL, fkBucketsA)) = (matA._1.df, matA._2)
+      val (dB, Seq(touchedR)) = (matB._1.df, matB._2)
 
-      // ---- LEFT entity upsert (latest-wins + tombstones) + the (fk, pk)
-      // index, and the RIGHT entity upsert: disjoint tables, disjoint
-      // paths — the two chains run concurrently; the tail below needs
-      // both committed (it reads left, index, and right post-swap).
-      // leftChain returns the LEFT-SWAP future: that swap is the chain's
-      // last write and nothing before the tail's left read consumes it,
-      // so it overlaps affected_keys (which reads only the committed
-      // index and the compacted batch); the caller awaits it before
-      // touching leftPath and before surfacing any outcome.
-      def leftChain(): scala.concurrent.Future[Unit] = {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        val touchedL = touchedBuckets(dA)
-        val curL = readTouched(spark, leftPath, touchedL).getOrElse(dA.limit(0))
-        // the pre-swap rows of the keys this batch changes — snapshot them
-        // (they feed the index retraction AFTER the left swap invalidates
-        // any frame still scanning the old bucket files); the snapshot
-        // reads the SAME pre-swap files as the merge, so it runs in a
-        // side lane while the merge computes
-        val fSnapshot = laneFuture(phased(acc, "left_old_snapshot")(
-          graft.Lineage.truncate(
-            curL.join(dA.select(col(pkA)), Seq(pkA), "left_semi"),
-            reliable)))
-        val unionL = curL.unionByName(dA)
-        val newLMat =
-          try phased(acc, "left_merge")(graft.Lineage.truncate(
-            unionL.groupBy(col(pkA))
-              .agg(max_by(struct(unionL.columns.toIndexedSeq.map(col): _*),
-                col(verA)).as("__r"))
-              .select(col("__r.*"))
-              .filter(col(opA) =!= "delete"), reliable))
-          catch { case t: Throwable =>
-            // a failed merge must not leak the side-lane snapshot
-            afterOnLane(fSnapshot)(_.foreach(_.release()))
-            throw t
+      // ---- affected output keys: Δfact ∪ index⁻¹(Δdim), from the PRE-swap
+      // index. dB's keys hash to the same buckets in the index (bucketed by
+      // fk) as in `right` (bucketed by pkB). May list a key twice.
+      val fAffected = laneFuture(phased(acc, "affected_keys") {
+        val fromB = idx.read(touchedR)
+          .map(_.join(dB.select(col(pkB).as("__fk")), Seq("__fk"), "left_semi")
+            .select(col("__pk").as("__k")))
+        val keys = fromB.foldLeft(dA.select(col(pkA).as("__k")))(_ unionByName _)
+        materialize(keys.withColumn(BucketCol, bucketOf(Seq(col("__k")), nBuckets)),
+          col(BucketCol))
+      })
+
+      // ---- LEFT: merge, and the pre-swap (fk, pk) of the batch's keys —
+      // both read the same pre-swap files, side by side
+      val fLeftMerge = laneFuture(
+        if (touchedL.isEmpty) None
+        else Some(phased(acc, "left_merge")(materialize(
+          merged(left.read(touchedL), dA, pkA, verA, opA), col(BucketCol))._1)))
+      val fOldEntries = laneFuture(
+        if (touchedL.isEmpty) None
+        else Some(phased(acc, "left_old_snapshot")(materialize(
+          left.read(touchedL).getOrElse(dA.limit(0))
+            .join(dA.select(col(pkA)), Seq(pkA), "left_semi")
+            .select(col(fk).as("__fk"), col(pkA).as("__pk")),
+          bucketOf(Seq(col("__fk")), nBuckets)))))
+
+      // ---- secondary index (fk, pkA): retract the batch keys' OLD entries
+      // from their old-fk buckets, insert the new ones; then the left swap.
+      // The index swaps only after the affected keys, which read the
+      // pre-swap index, are materialized, and strictly BEFORE the left swap
+      // — the pre-swap left table is the only durable record of the old fk,
+      // so if the process died with the left swapped but the index not, the
+      // replay's retraction set would be recomputed from POST-swap rows: a
+      // moved fact's old-fk entry (and a deleted fact's whole entry) would
+      // stay stale FOREVER. With the index first, a replay from either side
+      // of this boundary re-derives a correct retraction. Enumerated by
+      // JoinMvCrashSweepSpec.
+      val fLeftSwaps = laneFuture {
+        val newL = await(fLeftMerge)
+        val oldEntries = await(fOldEntries)
+        await(fAffected)
+        for (newLM <- newL; (_, Seq(oldFkBuckets)) <- oldEntries) {
+          phased(acc, "index_swap") {
+            // a superset of the buckets the retraction and the insertion
+            // touch; an extra bucket is rewritten unchanged
+            val touchedIdx = (fkBucketsA ++ oldFkBuckets).distinct.sorted
+            val newEntries = newLM.df
+              .join(dA.select(col(pkA)), Seq(pkA), "left_semi")
+              .select(col(fk).as("__fk"), col(pkA).as("__pk"))
+              .withColumn(BucketCol, bucketOf(Seq(col("__fk")), nBuckets))
+            val kept = idx.read(touchedIdx)
+              .map(_.join(dA.select(col(pkA).as("__pk")), Seq("__pk"), "left_anti"))
+            val newIdx = kept.fold(newEntries)(_.unionByName(newEntries))
+            swapTouched(newIdx.repartition(col(BucketCol)), idxPath, touchedIdx)
           }
-        try {
-          // the snapshot scans the PRE-SWAP bucket files, so it must be
-          // MATERIALIZED before the swap may rename those files out —
-          // launching the swap first would race its renames against the
-          // snapshot's still-running tasks. In practice the snapshot
-          // (launched before the heavier merge) is already done here.
-          val changedOldMat = Await.result(fSnapshot, Duration.Inf)
-          try {
-            // ---- secondary index (fk, pkA): retract changed keys' OLD
-            // entries from their old-fk buckets, insert the new ones.
-            // The index MUST commit BEFORE the left swap — the pre-swap
-            // left table is the only durable record of the old fk, so if
-            // the process dies with the left swapped but the index not,
-            // the replay's retraction set is recomputed from POST-swap
-            // rows: a moved fact's old-fk entry (and a deleted fact's
-            // whole entry, whose replay idxDelta is empty) would stay
-            // stale FOREVER. With the index first, a replay from either
-            // side of this boundary re-derives a correct retraction
-            // (pre-swap left → full re-retraction; post-index crash →
-            // the retraction is already durable). Enumerated by
-            // JoinMvCrashSweepSpec, which caught the parallel form
-            // orphaning the moved fact's old entry.
-            phased(acc, "index_swap") {
-              val oldEntries = changedOldMat.df
-                .select(col(fk).as("__fk"), col(pkA).as("__pk"))
-              val newEntries = newLMat.df
-                .join(dA.select(col(pkA)), Seq(pkA), "left_semi")
-                .select(col(fk).as("__fk"), col(pkA).as("__pk"))
-              val idxDelta = oldEntries.unionByName(newEntries)
-                .withColumn(BucketCol, bucketOf(Seq(col("__fk")), nBuckets))
-              val touchedIdx = touchedBuckets(idxDelta)
-              if (touchedIdx.nonEmpty) {
-                val curIdx = readTouched(spark, idxPath, touchedIdx)
-                  .getOrElse(idxDelta.limit(0).select(
-                    col("__fk"), col("__pk"), col(BucketCol)))
-                val newIdx = curIdx
-                  .join(dA.select(col(pkA).as("__pk")), Seq("__pk"), "left_anti")
-                  .unionByName(newEntries.withColumn(BucketCol,
-                    bucketOf(Seq(col("__fk")), nBuckets)))
-                swapTouched(newIdx, idxPath, touchedIdx)
-              }
-            }
-          } finally changedOldMat.release()
-        } catch { case t: Throwable => newLMat.release(); throw t }
-        // index durable — launch the swap and hand its future back;
-        // newLMat lives exactly as long as the swap (released by the
-        // returned future's completion, success or failure)
-        val fSwap = laneFuture(phased(acc, "left_swap")(
-          if (touchedL.nonEmpty)
-            swapTouched(newLMat.df, leftPath, touchedL)))
-        afterOnLane(fSwap)(_ => newLMat.release())
-      }
-
-      // returns dB's bucket set: the keys' buckets in `right` are also the
-      // index buckets affected_keys looks dB's keys up in (same bucketOf
-      // over the same values)
-      def rightChain(): Seq[Int] = phased(acc, "right_upsert") {
-        val touchedR = touchedBuckets(dB)
-        val curR = readTouched(spark, rightPath, touchedR).getOrElse(dB.limit(0))
-        val unionR = curR.unionByName(dB)
-        val newR = unionR.groupBy(col(pkB))
-          .agg(max_by(struct(unionR.columns.toIndexedSeq.map(col): _*),
-            col(verB)).as("__r"))
-          .select(col("__r.*"))
-          .filter(col(opB) =!= "delete")
-        if (touchedR.nonEmpty) swapTouched(newR, rightPath, touchedR)
-        touchedR
-      }
-
-      import scala.concurrent.Await
-      import scala.concurrent.duration.Duration
-      // if rightChain fails, the surviving left chain's swap must still
-      // be awaited before the failure surfaces (no orphan writer)
-      val (fLeftSwap, touchedR) = inParallel(leftChain(), rightChain(),
-        cleanupA = (f: scala.concurrent.Future[Unit]) => {
-          Await.ready(f, Duration.Inf)
-          // the batch is already failing on the right side; don't let a
-          // CONCURRENT left-swap failure vanish into the discarded future
-          // (replay converges either way, but the operator diagnosing the
-          // incident must see both)
-          f.value.get.failed.foreach(e => System.err.println(
-            s"[graft] JoinMv: left swap ALSO failed while the right chain " +
-              s"surfaced its own failure: $e"))
-        })
-
-      // ---- affected output keys: Δfact ∪ index⁻¹(Δdim) — reads only
-      // the committed index and the compacted batch, so it overlaps the
-      // in-flight left swap
-      val affectedMat =
-        try phased(acc, "affected_keys") {
-          val fromB = readTouched(spark, idxPath, touchedR)
-            .map(_.join(dB.select(col(pkB).as("__fk")), Seq("__fk"), "left_semi")
-              .select(col("__pk").as("__k")))
-            .getOrElse(dA.limit(0).select(col(pkA).as("__k")))
-          graft.Lineage.truncate(
-            dA.select(col(pkA).as("__k")).unionByName(fromB).distinct()
-              .withColumn(BucketCol, bucketOf(Seq(col("__k")), nBuckets)),
-            reliable)
-        } catch { case t: Throwable =>
-          Await.ready(fLeftSwap, Duration.Inf); throw t
+          phased(acc, "left_swap")(swapTouched(newLM.df, leftPath, touchedL))
         }
-      // surface a left-swap failure before anything reads the swapped
-      // table (the tail's leftPath reads need the post-swap files)
-      try Await.result(fLeftSwap, Duration.Inf)
-      catch { case t: Throwable => affectedMat.release(); throw t }
-      try {
-        val affected = affectedMat.df
-        val touchedMv = touchedBuckets(affected)
-        if (touchedMv.nonEmpty) {
-          // re-join just the affected fact rows against the dim buckets
-          // they reference — both reads are post-swap and bucket-pruned
-          val leftRows = readTouched(spark, leftPath, touchedMv)
-            .getOrElse(dA.limit(0))
-            .join(affected.select(col("__k").as(pkA)), Seq(pkA), "left_semi")
-          val leftMat = phased(acc, "join_left_read")(
-            graft.Lineage.truncate(leftRows, reliable))
-          try {
-            val rightNeeded = touchedBuckets(leftMat.df
-              .select(bucketOf(Seq(col(fk)), nBuckets).as(BucketCol)))
+      }
+
+      // ---- RIGHT: merge, then swap
+      val fRightMerge = laneFuture(
+        if (touchedR.isEmpty) None
+        else Some(phased(acc, "right_upsert")(materialize(
+          merged(right.read(touchedR), dB, pkB, verB, opB), col(BucketCol))._1)))
+      val fRightSwap = laneFuture(
+        await(fRightMerge).foreach(m =>
+          phased(acc, "right_swap")(swapTouched(m.df, rightPath, touchedR))))
+
+      // ---- MV: re-join the affected fact rows against the dim rows they
+      // reference — from the merged frames for buckets this batch touched,
+      // from disk for the buckets it did not (no swap renames those) — diff
+      // against the current MV rows, write the changelog, swap.
+      val leftRead = Promise[Unit]()
+      val rightRead = Promise[Unit]()
+      val fMv = laneFuture {
+        try {
+          val (affectedM, Seq(touchedMv)) = await(fAffected)
+          val affected = affectedM.df
+          val newL = await(fLeftMerge).map(_.df)
+          val newR = await(fRightMerge).map(_.df)
+          if (touchedMv.nonEmpty) {
+            // touchedL ⊆ touchedMv: every ΔA key is affected
+            val leftRows = (newL.toSeq ++ left.read(touchedMv.diff(touchedL)))
+              .reduceOption(_ unionByName _).getOrElse(dA.limit(0))
+              .join(affected.select(col("__k").as(pkA)), Seq(pkA), "left_semi")
+            val (leftM, Seq(rightNeeded)) = phased(acc, "join_left_read")(
+              materialize(leftRows, bucketOf(Seq(col(fk)), nBuckets)))
+            leftRead.trySuccess(())
             val dimCols = batchB.columns.filterNot(c => c == opB)
-            val rightState = readTouched(spark, rightPath, rightNeeded)
-              .map(_.select(dimCols.toIndexedSeq.map(col): _*))
-              .getOrElse(dB.select(dimCols.toIndexedSeq.map(col): _*).limit(0))
+            val rightState = (newR.toSeq ++ right.read(rightNeeded.diff(touchedR)))
+              .reduceOption(_ unionByName _).getOrElse(dB.limit(0))
+              .select(dimCols.toIndexedSeq.map(col): _*)
             val outCols = batchA.columns.filterNot(c => c == opA) ++
               dimCols.filterNot(c => c == pkB || c == verB)
-            val joined = leftMat.df.drop(BucketCol)
+            val joined = leftM.df.drop(BucketCol)
               .join(rightState, col(fk) === col(pkB),
                 if (innerJoin) "inner" else "left")
               .select(outCols.toIndexedSeq.map(col): _*)
               .withColumn(BucketCol, bucketOf(Seq(col(pkA)), nBuckets))
-            val newOutMat = phased(acc, "join_recompute")(
-              graft.Lineage.truncate(joined, reliable))
-            try {
-              val curMv = readTouched(spark, mvPath, touchedMv)
-                .getOrElse(newOutMat.df.limit(0))
-              // changelog BEFORE the swap (guarded by dir existence) so a
-              // replay after the swap skips it instead of emitting a
-              // spurious empty diff
-              changelogPath.foreach { cl => phased(acc, "changelog") {
-                val clFs = new Path(cl).getFileSystem(
-                  spark.sparkContext.hadoopConfiguration)
-                val dst = new Path(cl, s"batch=$batchId")
-                if (!clFs.exists(dst)) {
-                  val dataCols = outCols.toIndexedSeq.filterNot(_ == pkA)
-                  // presence flags, not struct-null tests: a full join's
-                  // missing side nulls the COLUMNS, and a struct of null
-                  // fields is still a non-null struct
-                  val oldRows = curMv
-                    .join(affected.select(col("__k").as(pkA)), Seq(pkA),
-                      "left_semi")
-                    .select(col(pkA) +: lit(true).as("__has_old") +:
-                      dataCols.map(c => col(c).as(s"__o_$c")): _*)
-                  val newRows = newOutMat.df
-                    .select(col(pkA) +: lit(true).as("__has_new") +:
-                      dataCols.map(col): _*)
-                  // both images ride along (Debezium's before/after shape):
-                  // a downstream MV maintained from this changelog needs
-                  // the OLD row to retract U/D contributions without ever
-                  // re-reading this MV's state
-                  val diff = oldRows.join(newRows, Seq(pkA), "full")
-                    .filter(col("__has_old").isNull ||
-                      col("__has_new").isNull ||
-                      !(struct(dataCols.map(c => col(s"__o_$c")): _*) <=>
-                        struct(dataCols.map(col): _*)))
-                    .select(col(pkA),
-                      when(col("__has_old").isNull, lit("I"))
-                        .when(col("__has_new").isNull, lit("D"))
-                        .otherwise(lit("U")).as("__op"),
-                      when(col("__has_new").isNull, lit(null))
-                        .otherwise(struct(dataCols.map(col): _*)).as("__row"),
-                      when(col("__has_old").isNull, lit(null))
-                        .otherwise(struct(dataCols.map(c =>
-                          col(s"__o_$c").as(c)): _*)).as("__old"))
-                  val staging = new Path(cl, s"_staging_$batchId")
-                  clFs.delete(staging, true)
-                  diff.write.mode("overwrite").parquet(staging.toString)
-                  clFs.mkdirs(dst.getParent)
-                  if (!clFs.rename(staging, dst))
-                    throw new IllegalStateException(
-                      s"changelog rename $staging -> $dst failed")
-                }
-              } }
-              phased(acc, "mv_swap") {
-                val kept = curMv
+            val newOut = phased(acc, "join_recompute")(
+              materialize(joined))._1.df
+            rightRead.trySuccess(())
+            val curMv = mv.read(touchedMv).getOrElse(newOut.limit(0))
+            changelogPath.foreach { cl => phased(acc, "changelog") {
+              val clFs = new Path(cl).getFileSystem(
+                spark.sparkContext.hadoopConfiguration)
+              val dst = new Path(cl, s"batch=$batchId")
+              if (!clFs.exists(dst)) {
+                val dataCols = outCols.toIndexedSeq.filterNot(_ == pkA)
+                // presence flags, not struct-null tests: a full join's
+                // missing side nulls the COLUMNS, and a struct of null
+                // fields is still a non-null struct
+                val oldRows = curMv
                   .join(affected.select(col("__k").as(pkA)), Seq(pkA),
-                    "left_anti")
-                swapTouched(kept.unionByName(newOutMat.df), mvPath, touchedMv)
+                    "left_semi")
+                  .select(col(pkA) +: lit(true).as("__has_old") +:
+                    dataCols.map(c => col(c).as(s"__o_$c")): _*)
+                val newRows = newOut
+                  .select(col(pkA) +: lit(true).as("__has_new") +:
+                    dataCols.map(col): _*)
+                // both images ride along (Debezium's before/after shape):
+                // a downstream MV maintained from this changelog needs
+                // the OLD row to retract U/D contributions without ever
+                // re-reading this MV's state
+                val diff = oldRows.join(newRows, Seq(pkA), "full")
+                  .filter(col("__has_old").isNull ||
+                    col("__has_new").isNull ||
+                    !(struct(dataCols.map(c => col(s"__o_$c")): _*) <=>
+                      struct(dataCols.map(col): _*)))
+                  .select(col(pkA),
+                    when(col("__has_old").isNull, lit("I"))
+                      .when(col("__has_new").isNull, lit("D"))
+                      .otherwise(lit("U")).as("__op"),
+                    when(col("__has_new").isNull, lit(null))
+                      .otherwise(struct(dataCols.map(col): _*)).as("__row"),
+                    when(col("__has_old").isNull, lit(null))
+                      .otherwise(struct(dataCols.map(c =>
+                        col(s"__o_$c").as(c)): _*)).as("__old"))
+                val staging = new Path(cl, s"_staging_$batchId")
+                clFs.delete(staging, true)
+                diff.write.mode("overwrite").parquet(staging.toString)
+                clFs.mkdirs(dst.getParent)
+                if (!clFs.rename(staging, dst))
+                  throw new IllegalStateException(
+                    s"changelog rename $staging -> $dst failed")
               }
-            } finally newOutMat.release()
-          } finally leftMat.release()
-        }
-      } finally affectedMat.release()
-      phased(acc, "marker")(writeMarker(fs, marker, batchId))
-      lastPhases = {
-        import scala.jdk.CollectionConverters._
-        acc.iterator().asScala.toSeq
+            } }
+            phased(acc, "mv_swap") {
+              val kept = curMv
+                .join(affected.select(col("__k").as(pkA)), Seq(pkA), "left_anti")
+              swapTouched(kept.unionByName(newOut).repartition(col(BucketCol)),
+                mvPath, touchedMv)
+            }
+          }
+        } finally { leftRead.trySuccess(()); rightRead.trySuccess(()) }
       }
-    } finally { dAMat.release(); dBMat.release() }
+      releaseWhenDone(fLeftMerge, fLeftSwaps, leftRead.future)
+      releaseWhenDone(fRightMerge, fRightSwap, rightRead.future)
+
+      // every lane finishes before the batch succeeds or fails — a failure
+      // surfacing while another lane is mid-write would hand the caller's
+      // replay an orphan writer to race. A lane that awaited a failed one
+      // rethrows the same exception; it is reported once.
+      val lanesOfBatch = Seq(fAffected, fLeftMerge, fOldEntries, fLeftSwaps,
+        fRightMerge, fRightSwap, fMv)
+      lanesOfBatch.foreach(f =>
+        scala.concurrent.Await.ready(f, scala.concurrent.duration.Duration.Inf))
+      val failures = lanesOfBatch.flatMap(_.value.get.failed.toOption)
+        .foldLeft(List.empty[Throwable])((seen, t) =>
+          if (seen.exists(_ eq t)) seen else seen :+ t)
+      failures.headOption.foreach { first =>
+        failures.tail.foreach(first.addSuppressed)
+        throw first
+      }
+    } finally held.forEach(_.release())
+    phased(acc, "marker")(writeMarker(fs, marker, batchId))
+    lastPhases = {
+      import scala.jdk.CollectionConverters._
+      acc.iterator().asScala.toSeq
+    }
   }
 }

@@ -82,9 +82,9 @@ object StreamingScd2 {
         batch.schema(fromCol).dataType))
       .withColumn("is_current", lit(true))
       .withColumn(BucketCol, bucketOf(Seq(col(keyCol)), nBuckets))
-    val newMat = graft.Lineage.truncate(newRows, reliable = false)
+    val (newMat, Seq(touched)) =
+      truncateObserving(newRows, reliable = false, col(BucketCol))
     try {
-      val touched = touchedBuckets(newMat.df)
       if (touched.isEmpty) { writeMarker(fs, marker, batchId); return }
       val cur = readTouched(spark, path, touched).getOrElse(newMat.df.limit(0))
 

@@ -111,20 +111,24 @@ object UpsertSink {
     val bucketed = batch.withColumn(BucketCol, bucketOf(keys.map(col), nBuckets))
     // a drifted batch fails before it runs a job, with the table untouched
     checkSchema(spark, targetPath, bucketed.schema)
-    // materialize once: the bucket-set collect AND the merge both read the
-    // batch; without this the batch's full lineage executes twice.
+    // materialize once, observing the bucket set on the way: the target
+    // read needs the set before the merge runs, and the merge then reads
+    // the materialized batch instead of running its lineage a second time.
     // reliable=true survives executor loss mid-batch (graft.Lineage); the
     // spill is fully consumed within this call, so it is released on exit.
-    val batchM = graft.Lineage.truncate(bucketed, reliable)
+    val (batchM, Seq(touched)) =
+      truncateObserving(bucketed, reliable, col(BucketCol))
     try {
       val batchB = batchM.df
-      val touched = touchedBuckets(batchB)
       if (touched.isEmpty) return
 
       val unioned = readTouched(spark, targetPath, touched)
         .map(batchB.unionByName(_)).getOrElse(batchB)
+      // one shuffle, clustered by bucket: each bucket lands in one task,
+      // so the swap writes one file per bucket
       val packed = unioned
-        .groupBy(keys.map(col): _*)
+        .repartition(col(BucketCol))
+        .groupBy(col(BucketCol) +: keys.map(col): _*)
         .agg(max_by(struct(unioned.columns.toIndexedSeq.map(col): _*), col(versionCol)).as("__r"))
         .select(col("__r.*"))
       val alive = deleteCol.fold(packed)(d => packed.filter(!col(d)))

@@ -15,7 +15,8 @@ import graft.streaming.{JoinMv, MaterializedView}
   * view is loaded, a round shaped like the one before it (a
   * [[MaterializedView]] commit and a [[JoinMv]] batch) compiles no
   * generated class — the session's codegen cache holds the round's whole
-  * working set — and runs only a bounded number of Spark jobs. */
+  * working set — runs only a bounded number of Spark jobs, and leaves one
+  * file in every bucket directory. */
 class CommitSteadyStateSpec extends SparkSpec {
   import spark.implicits._
   implicit def sqlContext: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -84,8 +85,18 @@ class CommitSteadyStateSpec extends SparkSpec {
       info(s"steady round: $compiled classes compiled, MV commit $mvJobs " +
         s"jobs, JoinMv batch $joinJobs jobs")
       assert(compiled === 0L, "a steady-state round recompiled generated classes")
-      assert(mvJobs > 0 && mvJobs <= 4, s"MV commit ran $mvJobs jobs")
-      assert(joinJobs > 0 && joinJobs <= 30, s"JoinMv batch ran $joinJobs jobs")
+      assert(mvJobs > 0 && mvJobs <= 3, s"MV commit ran $mvJobs jobs")
+      assert(joinJobs > 0 && joinJobs <= 23, s"JoinMv batch ran $joinJobs jobs")
+      // every bucket directory holds exactly one parquet file
+      for (table <- Seq("mv", "join/left", "join/right", "join/left_by_fk", "join/mv")) {
+        val dirs = new java.io.File(s"$base/$table").listFiles()
+          .filter(_.getName.startsWith(s"${graft.streaming.BucketedTable.BucketCol}="))
+        assert(dirs.nonEmpty, s"$table has no bucket directory")
+        dirs.foreach { d =>
+          val files = d.listFiles().map(_.getName).filter(_.endsWith(".parquet"))
+          assert(files.length === 1, s"$table/${d.getName} holds ${files.length} parquet files")
+        }
+      }
     } finally {
       q.stop()
       spark.sparkContext.removeSparkListener(jobs)

@@ -16,7 +16,8 @@ import org.apache.hadoop.util.Progressable
  *      spec can pin an RPC bound (e.g. safePoint's gap verification must
  *      not scale with the backlog).
  *   2. **Race injection**: one-shot before-hooks on (op, path-substring)
- *      that run arbitrary side effects at an exact interleaving point, a
+ *      that run arbitrary side effects at an exact interleaving point, an
+ *      observer of every operation and the thread making it, a
  *      `setTimes` silent no-op mode (object-store behavior), and
  *      count-limited listing HIDING (a readdir racing a sibling's deletes
  *      can miss a stable entry — hide it from the first N listings), and
@@ -145,6 +146,13 @@ object InstrumentedFs {
   def beforeOp(op: String, pathContains: String)(action: => Unit): Unit =
     hooks.add(Hook(op, pathContains, () => action))
 
+  @volatile private var observer: (String, String) => Unit = null
+  /** Call `f(op, path)` for every operation, on the thread making it,
+    * after the operation's before-hook and just before the operation
+    * itself — a spec's view of how operations on different threads
+    * interleave. Cleared by [[reset]]. */
+  def observeOps(f: (String, String) => Unit): Unit = observer = f
+
   /** Hooks and refusals not yet consumed — lets a spec assert its
     * injection FIRED. */
   def pendingHooks: Int = hooks.size() + refusals.size()
@@ -177,7 +185,7 @@ object InstrumentedFs {
     counters.clear(); listingCalls.set(0)
     setTimesNoop.set(false)
     hiddenNames.set(Set.empty); hideFromFirstListings.set(0)
-    hooks.clear(); refusals.clear()
+    hooks.clear(); refusals.clear(); observer = null
     matcher = None; tripAt.set(Long.MaxValue)
     matched.set(0); dead.set(false)
   }
@@ -195,6 +203,8 @@ object InstrumentedFs {
       }
     }
     if (fired != null) fired.action()
+    val o = observer
+    if (o != null) o(op, pathStr)
     matcher.foreach { m =>
       if (m(op, pathStr)) {
         val n = matched.incrementAndGet()
