@@ -25,10 +25,13 @@ import org.apache.spark.sql.types.{DataType, StructType}
  * table snapshot isolation is layered on top by [[SnapshotStore]]'s pointer
  * flip when required.
  *
- * One file per bucket. The writers hand [[swapTouched]] frames clustered by
- * `__bucket` (their merge shuffles on it, or they repartition on it before
- * the write), so each bucket's rows sit in one task and every bucket
- * directory holds exactly one part-file. A per-(task, bucket) layout wrote
+ * One file per bucket. [[JoinMv]]'s writers hand [[swapTouched]] frames
+ * clustered by `__bucket` (their merge shuffles on it, or they repartition
+ * on it before the write), so each bucket's rows sit in one task and every
+ * bucket directory holds exactly one part-file. (`UpsertSink.upsertBucketed`
+ * still groups by key alone: it writes a file per (task, bucket), one per
+ * bucket when AQE coalesces its shuffle to a single task, as it does for
+ * small batches.) A per-(task, bucket) layout wrote
  * up to tasks × buckets small files a swap, and both the write (a parquet
  * writer's setup and close) and every later read (a file open each) pay
  * per file. The trade-off: a swap's write parallelism equals the number of
@@ -64,10 +67,11 @@ object BucketedTable {
     * `col(BucketCol)` or a [[bucketOf]] over another key. The sets are
     * `collect_set` observations riding the job that materializes the frame
     * (a frame read back only to learn its bucket set costs a job per
-    * call), so they must stay small: bucket ids are bounded by nBuckets. */
+    * call), so they must stay small: bucket ids are bounded by nBuckets.
+    * With no `sets` it is a plain `truncate` and returns no sets. */
   def truncateObserving(df: DataFrame, reliable: Boolean,
       sets: Column*): (graft.Lineage.Materialized, Seq[Seq[Int]]) = {
-    require(sets.nonEmpty, "nothing to observe")
+    if (sets.isEmpty) return (graft.Lineage.truncate(df, reliable), Nil)
     val obs = org.apache.spark.sql.Observation()
     val named = sets.indices.map(i => collect_set(sets(i)).as(s"__set$i"))
     val m = graft.Lineage.truncate(

@@ -267,9 +267,7 @@ object JoinMv {
     val held = new java.util.concurrent.ConcurrentLinkedQueue[Materialized]()
     def materialize(df: DataFrame, sets: org.apache.spark.sql.Column*)
         : (Materialized, Seq[Seq[Int]]) = {
-      val out =
-        if (sets.isEmpty) (graft.Lineage.truncate(df, reliable), Nil)
-        else truncateObserving(df, reliable, sets: _*)
+      val out = truncateObserving(df, reliable, sets: _*)
       held.add(out._1)
       out
     }

@@ -124,11 +124,8 @@ object UpsertSink {
 
       val unioned = readTouched(spark, targetPath, touched)
         .map(batchB.unionByName(_)).getOrElse(batchB)
-      // one shuffle, clustered by bucket: each bucket lands in one task,
-      // so the swap writes one file per bucket
       val packed = unioned
-        .repartition(col(BucketCol))
-        .groupBy(col(BucketCol) +: keys.map(col): _*)
+        .groupBy(keys.map(col): _*)
         .agg(max_by(struct(unioned.columns.toIndexedSeq.map(col): _*), col(versionCol)).as("__r"))
         .select(col("__r.*"))
       val alive = deleteCol.fold(packed)(d => packed.filter(!col(d)))
