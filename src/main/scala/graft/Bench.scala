@@ -39,13 +39,15 @@ object Bench {
     // with an unchanged code path). Unpersist them synchronously so every
     // query is measured against an empty block manager, like a standalone
     // run; System.gc() then clears broadcast/codegen garbage as before.
-    // (Library users have the surgical equivalent, Lineage.drainLeaked —
-    // Bench keeps the broader unpersist-all: nothing else holds blocks
-    // here and it also covers any future non-Lineage persistence.)
+    // Lineage.drainLeaked frees graft's truncations, durable spills
+    // included; the broader unpersist-all after it also covers any
+    // non-Lineage persistence.
     val noDrain = sys.env.contains("SPARK_GRAFT_NO_DRAIN") // A/B escape hatch
     def drainLeakedBlocks(): Unit = {
-      if (!noDrain)
+      if (!noDrain) {
+        Lineage.drainLeaked(spark)
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      }
       System.gc()
     }
     // dev loop: SPARK_GRAFT_ONLY=q148_prefix_join,q134_pagerank restricts

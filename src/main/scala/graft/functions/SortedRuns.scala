@@ -19,7 +19,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
  * intermediate arrays per row and evaluates interpreted lambdas; these
  * expressions are a single allocation-free loop inside whole-stage codegen
  * — same contract, measured ~2× (1.8–2.9×) on the sf0.1 documents corpus
- * (tools.TimeKernel). Null elements
+ * (`graft.tools.Profile <sfDir> q141_simpson` times the query
+ * that uses them). Null elements
  * compare equal to each other (`array_sort` groups them last), matching
  * the count-by-value semantics of a groupBy.
  */

@@ -25,16 +25,16 @@ object Corpus {
     * round, rounds = component diameter (near-dup components are shallow;
     * `maxIters` guards degenerate chains). Lineage is truncated every round
     * ([[graft.Lineage]]), without which the plan doubles per iteration;
-    * `reliable = true` spills each round durably so a 1000-executor run
-    * losing one executor resumes from the last round instead of restarting
-    * the whole loop. Spills are released as soon as the next round lands —
-    * only the FINAL round's spill (which backs the returned frame) outlives
-    * the call, under the checkpoint dir the caller owns. The only
+    * under the durable posture each round spills durably, so a
+    * 1000-executor run losing one executor resumes from the last round
+    * instead of restarting the whole loop. Rounds are released as soon as
+    * the next lands — only the FINAL round's materialization (which backs
+    * the returned frame) outlives the call, until the caller releases it
+    * with `Lineage.drainLeaked` between queries. The only
     * driver-side values are the convergence count and loop bound —
     * aggregates, never data. */
   def q59DupClusters(spark: SparkSession, dir: String,
-      threshold: Double = 0.3, maxIters: Int = 20,
-      reliable: Boolean = false): DataFrame = {
+      threshold: Double = 0.3, maxIters: Int = 20): DataFrame = {
     val pairs = Dedup.q43NgramJaccard(spark, dir, threshold)
       .select(col("doc_a"), col("doc_b"))
     // symmetrize via ONE explode, not unionAll of two plan references: the
@@ -45,7 +45,7 @@ object Corpus {
       Graph.symmetrized(pairs, "doc_a", "doc_b")
         // lazy is safe HERE only because edgesM's truncate below is EAGER
         // and runs before edgesM0.release()
-        .repartition(col("src")), reliable, eager = false)
+        .repartition(col("src")), eager = false)
     // SELF-LOOPS make each HashMin round ONE join + ONE aggregate:
     // min over in-neighbors INCLUDING self ≡ least(own, neighbor-min),
     // so the per-round left-join-and-least (one more exchange + its AQE
@@ -54,7 +54,7 @@ object Corpus {
     // the loop must join a checkpoint, not re-run the union each round.
     val edgesM = graft.Lineage.truncate(
       edgesM0.df.unionAll(edgesM0.df.select(col("dst")).distinct()
-        .select(col("dst").as("src"), col("dst"))), reliable)
+        .select(col("dst").as("src"), col("dst"))))
     edgesM0.release()
     val edges = edgesM.df
     // CONVERGENCE: labels only ever DECREASE under min-propagation, so the
@@ -73,7 +73,7 @@ object Corpus {
     val obs0 = org.apache.spark.sql.Observation()
     var labelsM = graft.Lineage.truncate(
       edges.groupBy(col("dst").as("id")).agg(min(col("src")).as("cluster_id"))
-        .observe(obs0, labelSum, count(lit(1)).as("ln")), reliable)
+        .observe(obs0, labelSum, count(lit(1)).as("ln")))
     var labels = labelsM.df
     var prevSum = obs0.get("lsum")
     // The label table's row count is CONSTANT across rounds (one row per
@@ -97,7 +97,7 @@ object Corpus {
           edges.join(labelsB, col("src") === col("id"))
             .groupBy(col("dst").as("id"))
             .agg(min(col("cluster_id")).as("cluster_id"))
-            .observe(obs, labelSum), reliable)
+            .observe(obs, labelSum))
         val newSum = obs.get("lsum")
         changed = newSum != prevSum
         prevSum = newSum
@@ -596,7 +596,7 @@ object Corpus {
     // materialize once rather than re-running the pair scoring per branch
     val e = graft.Lineage.truncate(
       Dedup.q44DedupEmbedding(spark, dir, threshold)
-        .select(col("vec_a"), col("vec_b")), reliable = false, eager = false).df
+        .select(col("vec_a"), col("vec_b")), eager = false).df
     Graph.triangles(e, "vec_a", "vec_b")
   }
 
@@ -879,7 +879,7 @@ object Corpus {
     // at sf0.1); the edge list is tiny next to what produced it
     val e = graft.Lineage.truncate(
       Dedup.q43NgramJaccard(spark, dir, threshold)
-        .select(col("doc_a"), col("doc_b")), reliable = false, eager = false).df
+        .select(col("doc_a"), col("doc_b")), eager = false).df
     val deg = e.select(col("doc_a").as("doc_id"))
       .unionAll(e.select(col("doc_b").as("doc_id")))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("degree"))
@@ -1150,8 +1150,8 @@ object Corpus {
     * aggregation over E) is materialized once and reused every round;
     * each round's rank frame is lineage-truncated (plan growth is the
     * iterative-algorithm killer) and the previous round's spill released
-    * the moment the next lands; `reliable = true` makes rounds durable
-    * for long chains on a lossy cluster. No driver-side data values at
+    * the moment the next lands; the durable posture ([[graft.Lineage]])
+    * makes rounds durable for long chains on a lossy cluster. No driver-side data values at
     * all — ranks stay distributed; only the loop counter lives on the
     * driver. The dangling-mass term is zero BY CONSTRUCTION here (every
     * node of an undirected edge list has out-degree ≥ 1), noted where a
@@ -1165,27 +1165,30 @@ object Corpus {
     * bit-stability would need decimal contributions; not worth 4× the
     * shuffle width for a score whose consumers threshold it). */
   def q134PageRank(spark: SparkSession, dir: String,
-      threshold: Double = 0.6, iters: Int = 10, damping: Double = 0.85,
-      reliable: Boolean = false): DataFrame = {
+      threshold: Double = 0.6, iters: Int = 10,
+      damping: Double = 0.85): DataFrame = {
+    // the posture decides the loop's shape below: read once, so one call
+    // never mixes a lazy chain with per-round spills
+    val reliable = graft.Lineage.reliable(spark)
     val pairs = Dedup.q43NgramJaccard(spark, dir, threshold)
       .select(col("doc_a"), col("doc_b"))
     // ONE plan reference to the q43 pipeline (Graph.symmetrized), not a
     // unionAll whose branches each re-run the candidate+verify stages
     val edgesM = graft.Lineage.truncate(
       Graph.symmetrized(pairs, "doc_a", "doc_b")
-        .repartition(col("src")), reliable)
+        .repartition(col("src")))
     try {
       val edges = edgesM.df
       val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       // (src, dst, deg(src)) materialized ONCE — every round joins ranks
       // to THIS, so the Jaccard pipeline never re-executes
       val adjM = graft.Lineage.truncate(
-        edges.join(deg, Seq("src")).repartition(col("src")), reliable)
+        edges.join(deg, Seq("src")).repartition(col("src")))
       try {
         // nodes feeds every round's left join (+ the count) — materialize
         // once; it is cluster-count-sized
         val nodesM = graft.Lineage.truncate(
-          adjM.df.select(col("src").as("doc_id")).distinct(), reliable)
+          adjM.df.select(col("src").as("doc_id")).distinct())
         try {
           val nodes = nodesM.df
           val n = nodes.count()
@@ -1200,7 +1203,7 @@ object Corpus {
           // arithmetic — every round is still its own join+aggregation, the
           // shuffles just pipeline inside a single job, and fault recovery
           // flows through recomputable shuffle files instead of
-          // unrecoverable localCheckpoint blocks. The `reliable` posture
+          // unrecoverable localCheckpoint blocks. The durable posture
           // keeps the per-round durable spill: its purpose is bounding
           // recompute depth on a lossy cluster across an hours-long chain.
           var ranks: DataFrame = nodes.withColumn("rank", lit(1d / n.toDouble))
@@ -1224,7 +1227,7 @@ object Corpus {
                 (lit(base) + lit(damping) * coalesce(col("__in"), lit(0d)))
                   .as("rank"))
             if (reliable) {
-              val m = graft.Lineage.truncate(next, reliable)
+              val m = graft.Lineage.truncate(next)
               prevM.foreach(_.release())
               prevM = Some(m)
               ranks = m.df
@@ -1238,7 +1241,7 @@ object Corpus {
           // instead of broadcast and task time exploded 10×. The ~4-stage-
           // job-per-round latency is the price of the right join strategy.)
           if (reliable) ranks
-          else graft.Lineage.truncate(ranks, reliable = false).df
+          else graft.Lineage.truncate(ranks).df
         } finally nodesM.release()
       } finally adjM.release()
     } finally edgesM.release()
@@ -1269,7 +1272,7 @@ object Corpus {
       Tables.documents(spark, dir)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
         .groupBy(col("token"), col("doc_id")).agg(count(lit(1)).as("tf")),
-      reliable = false, eager = false).df
+      eager = false).df
     val totals = tf.groupBy(col("token"))
       .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"))
       .filter(col("df") >= minDf)
@@ -1338,7 +1341,7 @@ object Corpus {
     // materialize the tokenize-and-score pass once (q106's rule)
     val scored = graft.Lineage.truncate(
       q121QualityClassifier(spark, dir).select(col("doc_id"), col("score")),
-      reliable = false, eager = false).df
+      eager = false).df
     val counts = scored.groupBy(col("score")).agg(count(lit(1)).as("cnt"))
     val (cum, total) = Rank.prefixSumAndTotal(
       counts, Seq(col("score").asc), col("cnt"), "cum")
@@ -1455,7 +1458,7 @@ object Corpus {
       .select(col("doc_id"), col("source"))
     val counts = graft.Lineage.truncate(
       d.groupBy(col("source")).agg(count(lit(1)).as("n_s")),
-      reliable = false, eager = false).df
+      eager = false).df
     val total = counts.agg(sum(col("n_s")).as("n_total"))
     val based = counts.crossJoin(broadcast(total))
       .withColumn("base", expr(s"($budget * n_s) div n_total"))
@@ -1536,7 +1539,7 @@ object Corpus {
           pmod(xxhash64(col("bg")), lit(buckets)).as("b"))
         .groupBy(col("doc_id"), col("lang"), col("b"))
         .agg(count(lit(1)).as("n")),
-      reliable = false, eager = false).df
+      eager = false).df
     def dist(df: DataFrame) = df.groupBy(col("b")).agg(sum(col("n")).as("c"))
     val target = dist(feats.filter(col("lang") === targetLang))
       .select(col("b"), col("c").as("ct"))
@@ -1697,7 +1700,7 @@ object Corpus {
     // ONE plan reference to the q43 pipeline (Graph.symmetrized), not a
     // unionAll whose branches each re-run the candidate+verify stages
     val edgesM = graft.Lineage.truncate(
-      Graph.symmetrized(pairs, "doc_a", "doc_b"), reliable = false, eager = false)
+      Graph.symmetrized(pairs, "doc_a", "doc_b"), eager = false)
     val adj = edgesM.df
     val deg = adj.groupBy(col("src").as("id"))
       .agg(count(lit(1)).as("degree"))
@@ -1799,7 +1802,7 @@ object Corpus {
     // re-executes per branch (q106's rule)
     val counts = graft.Lineage.truncate(
       scores.groupBy(col("source"), col("score"))
-        .agg(count(lit(1)).as("n")), reliable = false, eager = false).df
+        .agg(count(lit(1)).as("n")), eager = false).df
     val totals = counts.groupBy(col("source")).agg(sum(col("n")).as("n_src"))
     val grid = counts.select(col("score")).distinct()
       .crossJoin(broadcast(totals)) // |scores| × |sources| evaluation grid
@@ -1907,7 +1910,7 @@ object Corpus {
     val perSource = graft.Lineage.truncate(
       words.groupBy(col("source"))
         .agg(expr(s"hll_sketch_agg(word, $lgK)").as("sk")),
-      reliable = false, eager = false).df
+      eager = false).df
     val bySource = perSource.select(col("source"),
       expr("hll_sketch_estimate(sk)").as("est_distinct"))
     val all = perSource.agg(
@@ -1916,8 +1919,8 @@ object Corpus {
     bySource.unionAll(all)
   }
 
-  def q172BpeMerges(spark: SparkSession, dir: String, rounds: Int = 8,
-      reliable: Boolean = false): DataFrame = {
+  def q172BpeMerges(spark: SparkSession, dir: String,
+      rounds: Int = 8): DataFrame = {
     import spark.implicits._
     val empty = array().cast("array<string>")
     var vocabM = graft.Lineage.truncate(
@@ -1925,8 +1928,7 @@ object Corpus {
         .select(explode(split(col("text"), " ")).as("word"))
         .filter(length(col("word")) > 0)
         .groupBy(col("word")).agg(count(lit(1)).as("freq"))
-        .select(split(col("word"), "").as("syms"), col("freq")),
-      reliable)
+        .select(split(col("word"), "").as("syms"), col("freq")))
     val merges = collection.mutable.ArrayBuffer[(Long, String, String, String, Long)]()
     try {
       var round = 1
@@ -1956,7 +1958,7 @@ object Corpus {
               concat(slice(acc, lit(1), size(acc) - 1), array(lit(xy))))
               .otherwise(concat(acc, array(s))))
           val nextM = graft.Lineage.truncate(
-            vocabM.df.select(applied.as("syms"), col("freq")), reliable)
+            vocabM.df.select(applied.as("syms"), col("freq")))
           vocabM.release()
           vocabM = nextM
           round += 1
@@ -2008,7 +2010,7 @@ object Corpus {
         .filter(length(col("word")) > 0)
         .groupBy(col("doc_id"), col("word"))
         .agg(count(lit(1)).as("n_occ"), first(col("n_chars")).as("__nc")),
-      reliable = false, eager = false).df
+      eager = false).df
     val vocab = toks.select(col("word")).distinct()
       .select(col("word"), size(encoded).cast("long").as("n_syms"))
     toks.join(vocab, Seq("word"))
@@ -2214,7 +2216,7 @@ object Corpus {
       Tables.documents(spark, dir)
         .select(col("source"), explode(split(col("text"), " ", -1)).as("w"))
         .groupBy(col("source"), col("w"))
-        .agg(count(lit(1)).as("n")), reliable = false, eager = false).df
+        .agg(count(lit(1)).as("n")), eager = false).df
     val totals = counts.groupBy(col("source")).agg(sum(col("n")).as("tot"))
     // the full vocab × sources grid: a token ABSENT from a source
     // contributes |p - 0| — left join fills its probability with 0
@@ -2225,7 +2227,7 @@ object Corpus {
         .join(counts, Seq("source", "w"), "left")
         .select(col("source"), col("w"),
           (coalesce(col("n"), lit(0L)).cast("double")
-            / col("tot").cast("double")).as("p")), reliable = false, eager = false).df
+            / col("tot").cast("double")).as("p")), eager = false).df
     val terms = grid.as("a").join(grid.as("b"),
         col("a.w") === col("b.w") && col("a.source") < col("b.source"))
       .select(col("a.source").as("source_a"), col("b.source").as("source_b"),

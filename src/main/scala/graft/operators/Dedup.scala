@@ -399,7 +399,7 @@ object Dedup {
           array_distinct(split(col("text"), " ")), t => xxhash64(t)))
           .as("hs"))
         .withColumn("n", size(col("hs")).cast("long")),
-      reliable = false, eager = false).df
+      eager = false).df
     val toks = d.select(col("doc_id"), col("n"), explode(col("hs")).as("h"))
     val dfreq = toks.groupBy(col("h")).agg(count(lit(1)).as("df"))
     // prefix length n − ⌈t·n⌉ + 1 in INTEGER arithmetic: FP ceil(t·n)
@@ -424,7 +424,7 @@ object Dedup {
         .filter(col("rn") <= col("n") - ceilTn + 1)
         .select(col("h"), col("doc_id"), col("n"))
         .repartition(numParts, col("h")),
-      reliable = false, eager = false).df
+      eager = false).df
     // PPJoin length filter, exact: J ≥ t ⟹ I ≥ t·(n_a+n_b)/(1+t) and
     // I ≤ min, so min·(1+t) ≥ t·(n_a+n_b) ⟺ min ≥ t·max — same 1e-6
     // integer resolution as the prefix bound. Applied IN the candidate
@@ -482,7 +482,7 @@ object Dedup {
         substring(col("text"), 1, prefixLen).as("k"))
     val ranked = graft.Lineage.truncate(
       Rank.globalRowNumber(d, Seq(col("k").asc, col("doc_id").asc), "rn"),
-      reliable = false, eager = false).df
+      eager = false).df
     // each row meets its `window` successors: fan the LEFT side out to the
     // successor ranks (map-side, ×window) and equi-join on the rank long
     val probes = ranked.select(col("doc_id").as("doc_a"),
@@ -571,7 +571,7 @@ object Dedup {
         .filter(col("i").cast("double") >= col("u").cast("double") * floor)
         .select(col("doc_a"), col("doc_b"),
           expr("(20L * i) div u").as("bin")),
-      reliable = false, eager = false).df
+      eager = false).df
     val perBin = pairs.groupBy(col("bin")).agg(count(lit(1)).as("n_pairs"))
     // docs implicated at threshold b/20 = docs in any pair with bin ≥ b:
     // per-doc MAX bin, then a cumulative count from the top
@@ -630,7 +630,7 @@ object Dedup {
       .select(col("doc_id"), posexplode(expr(
         s"transform(sequence(0, cast(ceil(size(ws) / ${segLen}.0) as int) - 1), " +
           s"i -> array_join(slice(ws, i * $segLen + 1, $segLen), ' '))"))
-        .as(Seq("i", "seg"))), reliable = false, eager = false).df
+        .as(Seq("i", "seg"))), eager = false).df
     // duplicated ⟺ min(doc) ≠ max(doc), as a partial-aggregated groupBy
     // mark table + unforced semi-join (q170's r20 device — the window form
     // put every row of a hot segment through ONE reducer; see q170SpanDedup)
@@ -652,7 +652,7 @@ object Dedup {
       .select(col("doc_id"), posexplode(expr(
         s"transform(sequence(0, size(ws) - $spanW), " +
           s"i -> array_join(slice(ws, i + 1, $spanW), ' '))")).as(Seq("i", "gram"))),
-      reliable = false, eager = false).df
+      eager = false).df
     val dupWins = wins.groupBy(col("gram"))
       .agg(min(col("doc_id")).as("__mn"), max(col("doc_id")).as("__mx"))
       .filter(col("__mn") =!= col("__mx"))
@@ -701,7 +701,7 @@ object Dedup {
         .select(col("doc_id"), col("sh"),
           TextHashFunctions.minhashSig(col("sh"), 64).as("sig"),
           size(col("sh")).cast("long").as("n_sh")),
-      reliable = false, eager = false).df
+      eager = false).df
     // bounded kernel: the truth scan filters on Jaccard >= threshold, so
     // the early-exit contract holds (below-floor -1 fails identically)
     val inter = graft.functions.GraftFunctions
@@ -757,8 +757,8 @@ object Dedup {
     * the CC loop is O(E) per round on the data-dependent (and in ER,
     * sparse) match graph; the final size/name joins key on the 8-byte
     * canonical key. */
-  def q180ErPipeline(spark: SparkSession, dir: String, maxIters: Int = 20,
-      reliable: Boolean = false): DataFrame = {
+  def q180ErPipeline(spark: SparkSession, dir: String,
+      maxIters: Int = 20): DataFrame = {
     val c = Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_name"))
     // pin the variant frame at session width on the join key: the
@@ -795,7 +795,7 @@ object Dedup {
       Graph.symmetrized(pairs, "ka", "kb")
         // lazy is safe HERE only because edgesM's truncate below is EAGER
         // and runs before edgesM0.release()
-        .repartition(col("src")), reliable, eager = false)
+        .repartition(col("src")), eager = false)
     // self-loops + monotone-sum convergence (q59's device): each round is
     // ONE join + ONE aggregate — min over in-neighbors INCLUDING self —
     // and the exact DECIMAL label sum rides the materialization as the
@@ -804,7 +804,7 @@ object Dedup {
     // column are gone
     val edgesM = graft.Lineage.truncate(
       edgesM0.df.unionAll(edgesM0.df.select(col("dst")).distinct()
-        .select(col("dst").as("src"), col("dst"))), reliable)
+        .select(col("dst").as("src"), col("dst"))))
     edgesM0.release()
     def labelSum = coalesce(sum(col("cl")
       .cast(org.apache.spark.sql.types.DecimalType(38, 0))), lit(0L)
@@ -814,7 +814,7 @@ object Dedup {
       val obs0 = org.apache.spark.sql.Observation()
       var labelsM = graft.Lineage.truncate(
         edges.groupBy(col("dst").as("id")).agg(min(col("src")).as("cl"))
-          .observe(obs0, labelSum, count(lit(1)).as("ln")), reliable)
+          .observe(obs0, labelSum, count(lit(1)).as("ln")))
       var prevSum = obs0.get("lsum")
       // constant across rounds (one row per node) — q59's broadcast-hint
       // guard: hint only when the OBSERVED label count fits the session
@@ -831,8 +831,7 @@ object Dedup {
           val nextM = graft.Lineage.truncate(
             edges.join(labelsB, col("src") === col("id"))
               .groupBy(col("dst").as("id")).agg(min(col("cl")).as("cl"))
-              .observe(obs, labelSum),
-            reliable)
+              .observe(obs, labelSum))
           val newSum = obs.get("lsum")
           changed = newSum != prevSum
           prevSum = newSum
@@ -857,7 +856,7 @@ object Dedup {
         // the CC labels must be consumed before release: materialize —
         // eagerly, via truncate, so the returned frame registers in the
         // leak registry (lazy to the caller; drained between queries)
-        graft.Lineage.truncate(out, reliable = false).df
+        graft.Lineage.truncate(out).df
       } finally labelsM.release()
     } finally edgesM.release()
   }
@@ -893,7 +892,7 @@ object Dedup {
         .select(col("doc_id"), posexplode(expr(
           s"transform(sequence(0, size(ws) - $w), " +
             s"i -> array_join(slice(ws, i + 1, $w), ' '))")).as(Seq("i", "gram"))),
-      reliable = false, eager = false).df
+      eager = false).df
     // "window occurs in MORE THAN ONE distinct doc" ⟺ min(doc) ≠ max(doc)
     // — computed as a partial-aggregable groupBy over the gram stream and
     // joined back, NOT as min/max windows over Window.partitionBy(gram):

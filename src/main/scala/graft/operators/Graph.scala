@@ -80,7 +80,7 @@ object Graph {
     * caller's to materialize. */
   def triangles(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
     val o = graft.Lineage.truncate(
-      orientByDegree(pairs, aCol, bCol), reliable = false, eager = false).df
+      orientByDegree(pairs, aCol, bCol), eager = false).df
     val wedges = o.as("x").join(o.as("y"),
       col("x.src") === col("y.src") &&
         (col("x.deg_dst") < col("y.deg_dst") ||

@@ -354,8 +354,7 @@ object IvfIndex {
           // released after the write — a long-running ingest must hold O(1)
           // checkpoint blocks, not one pinned merge per micro-batch
           val mergedM = graft.Lineage.truncate(
-            kept.select(delta.columns.map(col): _*).unionByName(delta),
-            reliable = false)
+            kept.select(delta.columns.map(col): _*).unionByName(delta))
           // stage beside the live cells, then commit per cell via the
           // parked swap — never dynamic partition overwrite, whose
           // delete-then-rename commit loses the cell on a mid-crash
@@ -559,7 +558,7 @@ object IvfIndex {
         // pinned: the overwrite target is the read path; released on exit
         val remainingM = graft.Lineage.truncate(
           all.filter(col("cell").isin(touched: _*))
-            .join(idsOnly, Seq("vec_id"), "left_anti"), reliable = false)
+            .join(idsOnly, Seq("vec_id"), "left_anti"))
         try {
         val remaining = remainingM.df
         val keptCells = remaining.select(col("cell")).distinct()

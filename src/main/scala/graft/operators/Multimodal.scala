@@ -635,7 +635,7 @@ object Multimodal {
           expr("transform(feature, x -> cast(x as double))").as("feature"))
         .withColumn("bin",
           expr("array_position(feature, array_max(feature))").cast("int")),
-      reliable = false, eager = false).df
+      eager = false).df
     imgs.select(col("media_id").as("img_a"), col("feature").as("fa"),
         col("bin"))
       .join(imgs.select(col("media_id").as("img_b"), col("feature").as("fb"),
@@ -805,9 +805,9 @@ object Multimodal {
       k: Int = 5, buckets0: Int = 0, maxL1: Double = 0.04,
       maxBucket: Int = 2000): DataFrame = {
     val pngs = graft.Lineage.truncate(
-      decodeBlockFeatures(imagesFromDocuments(spark, dir)), reliable = false, eager = false).df
+      decodeBlockFeatures(imagesFromDocuments(spark, dir)), eager = false).df
     val jpgs = graft.Lineage.truncate(
-      decodeBlockFeatures(jpegsFromDocuments(spark, dir)), reliable = false, eager = false).df
+      decodeBlockFeatures(jpegsFromDocuments(spark, dir)), eager = false).df
     val buckets =
       if (buckets0 > 0) buckets0
       // the pngs frame is already materialized — count() is cheap

@@ -83,7 +83,7 @@ object Rank {
       df.repartitionByRange(parts, sortCols: _*)
         .withColumn("__pid", spark_partition_id())
         .withColumn("__v", value.cast("long")),
-      reliable = false, eager = false).df
+      eager = false).df
     val counts = ranged.groupBy(col("__pid"))
       .agg(count(lit(1)).as("__c"), sum(col("__v")).as("__s"))
     val offsets = counts.as("a")
@@ -111,7 +111,7 @@ object Rank {
       .withColumn("__pid", spark_partition_id())
     val ranged = graft.Lineage.truncate(
       value.map(v => base.withColumn("__v", v.cast("long")))
-        .getOrElse(base), reliable = false, eager = false).df
+        .getOrElse(base), eager = false).df
     val perRow = value.map(_ => sum(col("__v"))).getOrElse(count(lit(1)))
     val counts = ranged.groupBy(col("__pid")).agg(perRow.as("__c"))
     val offsets = counts.as("a")
@@ -143,7 +143,7 @@ object Rank {
     val ranged = graft.Lineage.truncate(
       df.repartitionByRange(parts, sortCols: _*)
         .withColumn("__pid", spark_partition_id())
-        .withColumn("__v", value), reliable = false, eager = false).df
+        .withColumn("__v", value), eager = false).df
     val pmax = ranged.groupBy(col("__pid")).agg(max(col("__v")).as("__m"))
     val prefix = pmax.as("a")
       .join(broadcast(pmax.as("b")), col("b.__pid") < col("a.__pid"), "left")
@@ -172,7 +172,7 @@ object Rank {
     val ranged = graft.Lineage.truncate(
       df.repartitionByRange(parts, sortCols: _*)
         .withColumn("__pid", spark_partition_id())
-        .withColumn("__v", value.cast("long")), reliable = false, eager = false).df
+        .withColumn("__v", value.cast("long")), eager = false).df
     val sums = ranged.groupBy(col("__pid")).agg(sum(col("__v")).as("__s"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
     val offsets = sums.map(_._1).zip(sums.scanLeft(0L)(_ + _._2).init)
@@ -316,11 +316,11 @@ object Rank {
       .withColumn("__pid", spark_partition_id())
     val ranged = graft.Lineage.truncate(
       weight.map(v => base.withColumn("__w", v.cast("long")))
-        .getOrElse(base), reliable = false, eager = false).df
+        .getOrElse(base), eager = false).df
     val perRow = weight.map(_ => sum(col("__w"))).getOrElse(count(lit(1)))
     val weights = graft.Lineage.truncate( // ≤ parts + |groups| rows
       ranged.groupBy(col("__pid") +: groupCols.map(col): _*)
-        .agg(perRow.as("__c")), reliable = false, eager = false).df
+        .agg(perRow.as("__c")), eager = false).df
     val sameGroup = groupCols
       .map(c => col(s"a.$c") <=> col(s"b.$c")).reduce(_ && _)
     val offsets = weights.as("a")
@@ -363,7 +363,7 @@ object Rank {
     val ranged = graft.Lineage.truncate(
       df.repartitionByRange(parts, value.asc)
         .withColumn("__pid", spark_partition_id())
-        .withColumn("__v", value), reliable = false, eager = false).df
+        .withColumn("__v", value), eager = false).df
     val counts = ranged.groupBy(col("__pid")).agg(count(lit(1)).as("__n"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
     val total = counts.map(_._2).sum
@@ -390,7 +390,7 @@ object Rank {
     val parts = rangeParts(spark)
     val ranged = graft.Lineage.truncate(
       df.repartitionByRange(parts, sortCols: _*)
-        .withColumn("__pid", spark_partition_id()), reliable = false, eager = false).df
+        .withColumn("__pid", spark_partition_id()), eager = false).df
     // one long per non-empty partition to the driver — bounded by `parts`
     val counts = ranged.groupBy(col("__pid")).agg(count(lit(1)).as("__n"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)

@@ -1401,7 +1401,7 @@ object Relational {
     val li = graft.Lineage.truncate(
       Tables.lineitem(spark, dir)
         .select($"l_orderkey".as("ok"), $"l_partkey".as("pk")).distinct(),
-      reliable = false, eager = false).df
+      eager = false).df
     li.as("a").join(li.as("b"), $"a.ok" === $"b.ok" && $"a.pk" < $"b.pk")
       .select($"a.pk".as("pk_a"), $"b.pk".as("pk_b"))
       .groupBy($"pk_a", $"pk_b").agg(count(lit(1)).as("n_orders"))
@@ -1631,7 +1631,7 @@ object Relational {
       Tables.lineitem(spark, dir)
         .select($"l_orderkey".as("ok"), $"l_partkey".as("pk")).distinct()
         .repartition(graft.GraftSession.shufflePartitions(spark), $"ok"),
-      reliable = false, eager = false).df
+      eager = false).df
     val support = li.groupBy($"pk").agg(count(lit(1)).as("n"))
     // the co-occurrence aggregate feeds BOTH union branches — materialize
     // it too (q106's rule), or the quadratic self-join runs twice
@@ -1640,7 +1640,7 @@ object Relational {
           $"a.ok" === $"b.ok" && $"a.pk" < $"b.pk")
         .groupBy($"a.pk".as("pk_a"), $"b.pk".as("pk_b"))
         .agg(count(lit(1)).as("n_ab")),
-      reliable = false, eager = false).df
+      eager = false).df
     // ONE explode, not a unionAll of two plan references over the
     // materialized pair frame (reads it once instead of twice)
     val directed = pairs.select(explode(array(
@@ -1791,7 +1791,7 @@ object Relational {
           expr("unix_micros(cast(ts as timestamp)) div 604800000000")
             .as("week"))
         .distinct(),
-      reliable = false, eager = false).df
+      eager = false).df
     val w = Window.partitionBy($"user_id").orderBy($"week")
     val flagged = uw
       .withColumn("prev", lag($"week", 1).over(w))
@@ -1835,7 +1835,7 @@ object Relational {
         .agg(max($"o_orderdate").as("last_order"),
           count(lit(1)).as("frequency"),
           sum($"o_totalprice".cast("decimal(14,2)")).as("monetary")),
-      reliable = false, eager = false).df
+      eager = false).df
     val r = Rank.ntile(base, Seq($"last_order".desc, $"custkey".asc), 5,
       "r_score")
     val rf = Rank.ntile(r, Seq($"frequency".desc, $"custkey".asc), 5,
@@ -1883,7 +1883,7 @@ object Relational {
       Tables.events(spark, dir)
         .select(wk.as("week"), $"event_type")
         .groupBy($"week", $"event_type").agg(count(lit(1)).as("n")),
-      reliable = false, eager = false).df
+      eager = false).df
     val totals = counts.groupBy($"week").agg(sum($"n").as("total"))
     val cur = counts.select($"week", $"event_type", $"n".as("cur_n"))
     val ref = counts.select(($"week" + 1).as("week"), $"event_type",
@@ -1978,7 +1978,7 @@ object Relational {
     // exchange across the two aggregations on its own — measured)
     val perPart = graft.Lineage.truncate(
       li.groupBy($"l_partkey").agg(sum($"v").as("value_dec")),
-      reliable = false, eager = false).df
+      eager = false).df
     val total = perPart.agg(sum($"value_dec").as("total_dec"))
     perPart.crossJoin(broadcast(total))
       .withColumn("share",
@@ -2146,7 +2146,7 @@ object Relational {
         .select($"l_orderkey", $"l_partkey").distinct()
         .repartition(graft.GraftSession.shufflePartitions(spark),
           $"l_orderkey"),
-      reliable = false, eager = false).df
+      eager = false).df
     val itemCounts = baskets.groupBy($"l_partkey")
       .agg(count(lit(1)).as("n_item"))
     val nBaskets = baskets.select($"l_orderkey").distinct()
@@ -2326,7 +2326,7 @@ object Relational {
         .select($"event_type",
           expr(s"unix_micros(cast(ts as timestamp)) div ${hourUs}L").as("h"))
         .groupBy($"event_type", $"h").agg(count(lit(1)).as("n")),
-      reliable = false, eager = false).df
+      eager = false).df
     val actual = buckets.select($"event_type", $"h", $"n".as("actual"))
     val forecast = buckets.select($"event_type",
       ($"h" + weekHours).as("h"), $"n".as("forecast"))
@@ -2362,7 +2362,7 @@ object Relational {
           expr("unix_micros(cast(ts as timestamp)) div 604800000000L")
             .as("week"))
         .groupBy($"event_type", $"week").agg(count(lit(1)).as("x")),
-      reliable = false, eager = false).df
+      eager = false).df
     val stats = weekly.groupBy($"event_type")
       .agg(count(lit(1)).as("n_weeks"), sum($"x").as("s_total"))
     val w = Window.partitionBy($"event_type").orderBy($"week")
@@ -2748,7 +2748,7 @@ object Relational {
         // above the true value would round a boundary event a day over
         .select(expr("unix_micros(cast(ts as timestamp)) div 86400000000L")
           .as("day"))
-        .groupBy($"day").agg(count(lit(1)).as("x")), reliable = false, eager = false).df
+        .groupBy($"day").agg(count(lit(1)).as("x")), eager = false).df
     val lagged = days
       .withColumn("lag",
         explode(array((1 to maxLag).map(i => lit(i.toLong)): _*)))
@@ -3858,7 +3858,7 @@ object Relational {
     // materialize once or Catalyst re-runs BOTH fact rollups per side
     val pts = graft.Lineage.truncate(
       bal.join(rev, $"nk" === $"nk2").select($"nk", $"x", $"y"),
-      reliable = false, eager = false).df
+      eager = false).df
     val a = pts.select($"nk".as("ia"), $"x".as("xa"), $"y".as("ya"))
     val b = pts.select($"nk".as("ib"), $"x".as("xb"), $"y".as("yb"))
     val pairs = a.join(b, $"ia" < $"ib") // ≤ |nations|²/2 rows
@@ -4012,7 +4012,7 @@ object Relational {
         .filter($"a.pk" < $"b.pk")
         .select($"a.pk".as("lo"), $"b.pk".as("hi"))
         .distinct(), // one undirected edge per co-purchased pair
-      reliable = false, eager = false).df
+      eager = false).df
     // ONE exploded pass for degrees and an EDGE-level join chain for the
     // moments, instead of materializing the directed 2|E| list and
     // joining it to the degree table twice: over the directed list every
@@ -4112,7 +4112,7 @@ object Relational {
           min($"l_linenumber").as("mn"), max($"l_linenumber").as("mx"))
         .withColumn("has_dup", $"n" > $"d")
         .withColumn("has_gap", !($"mn" === 1 && $"mx" === $"d")),
-      reliable = false, eager = false).df
+      eager = false).df
     val audit = per.agg(count(lit(1)).as("orders_with_lines"),
       sum(when($"has_dup", 1L).otherwise(0L)).as("with_dups"),
       sum(when($"has_gap", 1L).otherwise(0L)).as("with_gaps"),
@@ -4949,7 +4949,7 @@ object Relational {
       Tables.orders(spark, dir)
         .groupBy($"o_orderdate".as("day"))
         .agg(sum((money($"o_totalprice") * 100).cast("long")).as("x")),
-      reliable = false, eager = false).df
+      eager = false).df
     val a = daily.select($"day".as("da"), $"x".as("xa"))
     val b = daily.select($"day".as("db"), $"x".as("xb"))
     val s = a.join(b, $"da" < $"db")
@@ -4992,7 +4992,7 @@ object Relational {
         .select(
           expr("unix_micros(cast(day as timestamp)) div 86400000000L")
             .as("d"), $"x"),
-      reliable = false, eager = false).df
+      eager = false).df
     // spread the O(|days|²) slope generation: `daily` checkpoints as ONE
     // partition (it is tiny), so the broadcast pair join would emit all
     // ~3M slopes from one task — fan the probe side to session width
@@ -5040,7 +5040,7 @@ object Relational {
         .agg(sum((money($"l_extendedprice") * 100).cast("long")).as("cents"),
           sum($"l_quantity".cast("long")).as("qty"))
         .withColumn("unit", $"cents".cast("double") / $"qty".cast("double")),
-      reliable = false, eager = false).df
+      eager = false).df
     val base0 = pm.agg(min($"month").as("m0"))
     val base = pm.join(broadcast(base0), $"month" === $"m0")
       .select($"pk".as("bpk"), $"unit".as("p0"), $"qty".as("q0"))

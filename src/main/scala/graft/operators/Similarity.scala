@@ -195,7 +195,7 @@ object Similarity {
     // assignments feed BOTH join sides (probes + candidates) — materialize
     // once or the KMeans transform + decode re-executes per reference
     val assignments = graft.Lineage.truncate(
-      built.assignments, reliable = false, eager = false).df
+      built.assignments, eager = false).df
     val index = built.copy(assignments = assignments)
     // the probe side reuses the decoded emb/norm the index build already
     // produced — no second corpus scan or float→double/norm pass
@@ -244,7 +244,7 @@ object Similarity {
     val side = corpus.select(col("vec_id"), sideExpr.as("sideA"))
     val built = IvfIndex.build(corpus, nCells)
     val assignments = graft.Lineage.truncate(
-      built.assignments.join(side, Seq("vec_id")), reliable = false, eager = false).df
+      built.assignments.join(side, Seq("vec_id")), eager = false).df
     val d2 = aggregate(
       zip_with(col("q_emb"), col("centroid"), (a, b) => (a - b) * (a - b)),
       lit(0.0), _ + _)
@@ -261,7 +261,7 @@ object Similarity {
         col("cell"))
     // probes feed BOTH union branches — materialize once, or the
     // centroid cross + probe window re-executes per direction
-    val probesM = graft.Lineage.truncate(probes, reliable = false, eager = false).df
+    val probesM = graft.Lineage.truncate(probes, eager = false).df
     def pairs(probeSideA: Boolean): DataFrame = {
       val p = probesM.filter(if (probeSideA) col("sideA") else !col("sideA"))
         .select(col("vec_id").as("p_id"), col("q_emb"), col("q_norm"),
@@ -336,7 +336,7 @@ object Similarity {
     val a = graft.Lineage.truncate(
       idx.assignments.select(
         col("vec_id"), col("cell"), col("emb"), col("norm")),
-      reliable = false, eager = false).df
+      eager = false).df
     val dup = Skew.saltedSelfPairs(a, "cell", "vec_id", salts = 4,
         maxBlock = maxBlock)
       .filter((dotD(col("a.emb"), col("b.emb"))
@@ -457,7 +457,7 @@ object Similarity {
           (dotD(col("ea"), col("eb")) / (col("na") * col("nb"))).as("cosine"))
       } else cellBlockedCrossScores(raw,
         (col("label") % 2 === 0), nCells, nProbe)
-    val scored = graft.Lineage.truncate(scored0, reliable = false, eager = false).df
+    val scored = graft.Lineage.truncate(scored0, eager = false).df
     val bestA = scored.groupBy(col("vec_a"))
       .agg(max(struct(col("cosine"), col("vec_b"))).as("m"))
       .select(col("vec_a"), col("m.vec_b").as("vec_b"))
@@ -864,7 +864,7 @@ object Similarity {
     val mLit = array(mean.map(lit): _*)
     val centered = graft.Lineage.truncate(
       raw.select(zip_with(col("emb"), mLit, (a, b) => a - b).as("x")),
-      reliable = false, eager = false).df
+      eager = false).df
     var v = Array.fill(dim)(1.0 / math.sqrt(dim))
     var lambda = 0.0
     for (_ <- 1 to iters) {

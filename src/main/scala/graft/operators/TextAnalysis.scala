@@ -283,7 +283,8 @@ object TextAnalysis {
     * allocation-free run-length loop each inside whole-stage codegen (the
     * first implementation's filter/zip_with/aggregate HOF chain allocated
     * three index arrays per row and ran interpreted lambdas; same
-    * contract, ~2× measured — tools.TimeKernel). Zero shuffle, linear in
+    * contract, ~2× measured; `graft.tools.Profile <sfDir>
+    * q141_simpson` times it). Zero shuffle, linear in
     * tokens after the
     * O(n log n) in-task sort. Σc² and N are exact BIGINTs; the index is
     * ONE IEEE division of (N²−Σc²) by N². */
@@ -368,13 +369,13 @@ object TextAnalysis {
             "acc -> acc.out)")).as(Seq("pos", "x")))
         .select(col("doc_id"), col("x.seg").as("seg"), col("pos"),
           col("x.word").as("word")),
-      reliable = false, eager = false).df
+      eager = false).df
     val phrases = graft.Lineage.truncate(
       words.groupBy(col("doc_id"), col("seg"))
         .agg(array_join(expr("transform(array_sort(collect_list(" +
           "struct(pos, word))), x -> x.word)"), " ").as("phrase"),
           count(lit(1)).as("plen")),
-      reliable = false, eager = false).df
+      eager = false).df
     // word stats over phrase occurrences: freq = occurrences, deg = Σ plen
     val stats = words.join(
         phrases.select(col("doc_id"), col("seg"), col("plen")),
@@ -431,7 +432,7 @@ object TextAnalysis {
     // the profile feeds THREE plan branches (norms + both join sides) —
     // materialize once (q106's rule; returned frames keep their
     // checkpoint, q85's pattern)
-    val prof = graft.Lineage.truncate(grams, reliable = false, eager = false).df
+    val prof = graft.Lineage.truncate(grams, eager = false).df
     val norms = prof.groupBy(col("lang"))
       .agg(sum(col("cnt") * col("cnt")).as("nrm2"))
     prof.select(col("lang").as("lang_a"), col("gram"), col("cnt").as("ca"))
@@ -523,7 +524,7 @@ object TextAnalysis {
         .select(col("doc_id"), posexplode(expr(
           s"transform(sequence(0, size(ws) - $k), " +
             s"i -> substring(md5(array_join(slice(ws, i + 1, $k), ' ')), 1, 8))"))
-          .as(Seq("pos", "h"))), reliable = false, eager = false).df
+          .as(Seq("pos", "h"))), eager = false).df
     // window starting at s covers gram positions [s, s+w-1]: replicate each
     // gram into the ≤w windows containing it (bounded ×w map-side)
     val inWindow = grams

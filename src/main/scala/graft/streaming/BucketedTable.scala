@@ -62,20 +62,20 @@ object BucketedTable {
       }
       .collect().flatten.distinct.sorted.toSeq
 
-  /** `graft.Lineage.truncate(df, reliable)` plus, for each of `sets`, the
+  /** `graft.Lineage.truncate(df)` plus, for each of `sets`, the
     * sorted distinct int values it takes over `df` — typically bucket ids,
     * `col(BucketCol)` or a [[bucketOf]] over another key. The sets are
     * `collect_set` observations riding the job that materializes the frame
     * (a frame read back only to learn its bucket set costs a job per
     * call), so they must stay small: bucket ids are bounded by nBuckets.
     * With no `sets` it is a plain `truncate` and returns no sets. */
-  def truncateObserving(df: DataFrame, reliable: Boolean,
+  def truncateObserving(df: DataFrame,
       sets: Column*): (graft.Lineage.Materialized, Seq[Seq[Int]]) = {
-    if (sets.isEmpty) return (graft.Lineage.truncate(df, reliable), Nil)
+    if (sets.isEmpty) return (graft.Lineage.truncate(df), Nil)
     val obs = org.apache.spark.sql.Observation()
     val named = sets.indices.map(i => collect_set(sets(i)).as(s"__set$i"))
     val m = graft.Lineage.truncate(
-      df.observe(obs, named.head, named.tail: _*), reliable)
+      df.observe(obs, named.head, named.tail: _*))
     try {
       val got = obs.get
       (m, sets.indices.map(i =>

@@ -40,7 +40,6 @@ object IncrementalMv {
       pk: String, version: String, op: String,
       groupKey: String, valueCol: String,
       nBuckets: Int = 16,
-      reliable: Boolean = false,
       changelogPath: Option[String] = None)(batch: DataFrame, batchId: Long): Unit = {
     import BucketedTable._
     val spark = batch.sparkSession
@@ -49,18 +48,15 @@ object IncrementalMv {
     val aggPath = s"$basePath/agg"
 
     // 1. final change per key within the batch, tagged with its entity bucket
-    val compacted = batch
-      .groupBy(col(pk))
-      .agg(max_by(struct(batch.columns.toIndexedSeq.map(col): _*), col(version)).as("__r"))
-      .select(col("__r.*"))
+    val compacted = ChangelogOps.latestByKey(batch, Seq(pk), version)
       .withColumn(BucketCol, bucketOf(Seq(col(pk)), nBuckets))
     // materialized once (its bucket set observed on the way): the diff
     // and the entity union both read it — without this the compaction
-    // shuffle runs twice.
-    // reliable=true survives executor loss mid-batch (graft.Lineage); the
-    // spill is fully consumed within this call → released on exit.
+    // shuffle runs twice. Under the durable posture (graft.Lineage) it
+    // survives executor loss mid-batch; it is fully consumed within this
+    // call → released on exit.
     val (compactedMat, Seq(touchedEntity)) =
-      truncateObserving(compacted, reliable, col(BucketCol))
+      truncateObserving(compacted, col(BucketCol))
     try {
     val compactedM = compactedMat.df
 
@@ -122,7 +118,7 @@ object IncrementalMv {
       // pipeline AND could re-merge the order-sensitive double sums
       // differently (task retry/fetch order), letting the emitted
       // changelog disagree with the committed state in the last ulp
-      val mergedMat = graft.Lineage.truncate(merged, reliable)
+      val mergedMat = graft.Lineage.truncate(merged)
       try {
       val mergedM = mergedMat.df
       // 4a'. emit the MV's OWN output changelog (retraction stream — the
@@ -172,9 +168,7 @@ object IncrementalMv {
 
     // 4b. upsert the touched entity buckets (latest-row-wins + tombstones)
     val unioned = current.unionByName(compactedM)
-    val entity = unioned.groupBy(col(pk))
-      .agg(max_by(struct(unioned.columns.toIndexedSeq.map(col): _*), col(version)).as("__r"))
-      .select(col("__r.*"))
+    val entity = ChangelogOps.latestByKey(unioned, Seq(pk), version)
       .filter(col(op) =!= "delete")
     swapTouched(entity, entityPath, touchedEntity)
     } finally compactedMat.release()

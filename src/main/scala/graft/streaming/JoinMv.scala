@@ -49,10 +49,10 @@ import org.apache.spark.sql.functions._
  * Work per batch ∝ |ΔA| + |ΔB| + |affected| + the buckets they hash into —
  * never table-sized. Each bucket directory holds one file: the merges
  * shuffle once on the bucket column, and the index and MV swaps
- * repartition by it (the trade-off is in [[BucketedTable]]'s doc). With
- * `reliable = true` the merged frames are read back from their spill
- * files, which loses that clustering, so `left` and `right` buckets may
- * then hold several files.
+ * repartition by it (the trade-off is in [[BucketedTable]]'s doc). Under
+ * the durable lineage posture ([[graft.Lineage]]) the merged frames are
+ * read back from their spill files, which loses that clustering, so
+ * `left` and `right` buckets may then hold several files.
  *
  * Ordering rules, each kept by one await:
  *   - the affected keys are materialized before the index swap renames a
@@ -195,10 +195,7 @@ object JoinMv {
   private def merged(cur: Option[DataFrame], delta: DataFrame, pk: String,
       ver: String, op: String): DataFrame = {
     val u = cur.fold(delta)(_.unionByName(delta))
-    u.repartition(col(BucketCol))
-      .groupBy(col(BucketCol), col(pk))
-      .agg(max_by(struct(u.columns.toIndexedSeq.map(col): _*), col(ver)).as("__r"))
-      .select(col("__r.*"))
+    ChangelogOps.latestByKey(u.repartition(col(BucketCol)), Seq(BucketCol, pk), ver)
       .filter(col(op) =!= "delete")
   }
 
@@ -227,7 +224,6 @@ object JoinMv {
       pkA: String, verA: String, opA: String, fk: String,
       pkB: String, verB: String, opB: String,
       nBuckets: Int = 16, innerJoin: Boolean = false,
-      reliable: Boolean = false,
       changelogPath: Option[String] = None)
       (batchA: DataFrame, batchB: DataFrame, batchId: Long): Unit = {
     val spark = batchA.sparkSession
@@ -267,7 +263,7 @@ object JoinMv {
     val held = new java.util.concurrent.ConcurrentLinkedQueue[Materialized]()
     def materialize(df: DataFrame, sets: org.apache.spark.sql.Column*)
         : (Materialized, Seq[Seq[Int]]) = {
-      val out = truncateObserving(df, reliable, sets: _*)
+      val out = truncateObserving(df, sets: _*)
       held.add(out._1)
       out
     }

@@ -279,10 +279,7 @@ object SnapshotStore {
     val prior = latestVersion(spark, basePath)
       .map(v => readSnapshot(spark, basePath, Some(v)))
     val unioned = prior.map(_.unionByName(batch)).getOrElse(batch)
-    val packed = unioned
-      .groupBy(keys.map(col): _*)
-      .agg(max_by(struct(unioned.columns.toIndexedSeq.map(col): _*), col(versionCol)).as("__r"))
-      .select(col("__r.*"))
+    val packed = ChangelogOps.latestByKey(unioned, keys, versionCol)
     deleteCol.fold(packed)(d => packed.filter(!col(d)))
   }
 

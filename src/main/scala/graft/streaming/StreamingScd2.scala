@@ -83,7 +83,7 @@ object StreamingScd2 {
       .withColumn("is_current", lit(true))
       .withColumn(BucketCol, bucketOf(Seq(col(keyCol)), nBuckets))
     val (newMat, Seq(touched)) =
-      truncateObserving(newRows, reliable = false, col(BucketCol))
+      truncateObserving(newRows, col(BucketCol))
     try {
       if (touched.isEmpty) { writeMarker(fs, marker, batchId); return }
       val cur = readTouched(spark, path, touched).getOrElse(newMat.df.limit(0))

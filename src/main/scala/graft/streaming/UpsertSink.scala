@@ -67,10 +67,7 @@ object UpsertSink {
     val unioned = current.map(_.unionByName(batch)).getOrElse(batch)
 
     // latest-version-wins per key; single shuffle, no sort.
-    val packed = unioned
-      .groupBy(keys.map(col): _*)
-      .agg(max_by(struct(unioned.columns.toIndexedSeq.map(col): _*), col(versionCol)).as("__r"))
-      .select(col("__r.*"))
+    val packed = ChangelogOps.latestByKey(unioned, keys, versionCol)
     val alive = deleteCol.fold(packed)(d => packed.filter(!col(d)))
 
     fs.delete(stage, true)
@@ -104,8 +101,7 @@ object UpsertSink {
       keys: Seq[String],
       versionCol: String,
       deleteCol: Option[String] = None,
-      nBuckets: Int = 64,
-      reliable: Boolean = false): Unit = {
+      nBuckets: Int = 64): Unit = {
     import BucketedTable._
     val spark = batch.sparkSession
     val bucketed = batch.withColumn(BucketCol, bucketOf(keys.map(col), nBuckets))
@@ -114,20 +110,17 @@ object UpsertSink {
     // materialize once, observing the bucket set on the way: the target
     // read needs the set before the merge runs, and the merge then reads
     // the materialized batch instead of running its lineage a second time.
-    // reliable=true survives executor loss mid-batch (graft.Lineage); the
-    // spill is fully consumed within this call, so it is released on exit.
-    val (batchM, Seq(touched)) =
-      truncateObserving(bucketed, reliable, col(BucketCol))
+    // Under the durable posture (graft.Lineage) it survives executor loss
+    // mid-batch; it is fully consumed within this call, so it is released
+    // on exit.
+    val (batchM, Seq(touched)) = truncateObserving(bucketed, col(BucketCol))
     try {
       val batchB = batchM.df
       if (touched.isEmpty) return
 
       val unioned = readTouched(spark, targetPath, touched)
         .map(batchB.unionByName(_)).getOrElse(batchB)
-      val packed = unioned
-        .groupBy(keys.map(col): _*)
-        .agg(max_by(struct(unioned.columns.toIndexedSeq.map(col): _*), col(versionCol)).as("__r"))
-        .select(col("__r.*"))
+      val packed = ChangelogOps.latestByKey(unioned, keys, versionCol)
       val alive = deleteCol.fold(packed)(d => packed.filter(!col(d)))
       swapTouched(alive, targetPath, touched)
     } finally batchM.release()
@@ -141,10 +134,9 @@ object UpsertSink {
       keys: Seq[String],
       versionCol: String,
       deleteCol: Option[String] = None,
-      nBuckets: Int = 0,
-      reliable: Boolean = false): (DataFrame, Long) => Unit =
+      nBuckets: Int = 0): (DataFrame, Long) => Unit =
     (batch, _) =>
       if (nBuckets > 1)
-        upsertBucketed(batch, targetPath, keys, versionCol, deleteCol, nBuckets, reliable)
+        upsertBucketed(batch, targetPath, keys, versionCol, deleteCol, nBuckets)
       else upsertBatch(batch, targetPath, keys, versionCol, deleteCol)
 }

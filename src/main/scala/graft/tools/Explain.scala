@@ -1,19 +1,25 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Dev helper: print the formatted plan of named SparkEntry queries.
-  * Usage: Explain <sfDir> <query> [query ...] — one session for the
-  * whole list, `===== <query> =====` separators between plans. */
+/** Dev tool: print the formatted physical plan of named SparkEntry queries
+  * — the plan-shape audit loop. Usage:
+  * `tools/run.sh graft.tools.Explain <sfDir> [query ...]` (no names =
+  * every query); one session for the whole list, `===== <query> =====`
+  * separators between plans. Grep targets: unexpected
+  * `BroadcastExchange` on corpus-sized frames, `Window` with an empty
+  * partition spec outside a bounded frame, missing `PushedFilters` at
+  * scans. Env: SPARK_GRAFT_CPUS (default 4). */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val names = args.drop(1).toSeq
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val names =
+      if (args.length > 1) args.drop(1).toSeq
+      else graft.SparkEntry.queries.keys.toSeq.sorted
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = graft.GraftSession.builder("graft-explain", s"local[$cpus]", cpus.toInt)
+      .config("spark.ui.enabled", false)
+      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       println(s"===== $name =====")

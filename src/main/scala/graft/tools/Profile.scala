@@ -4,14 +4,13 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Dev profiler: run named SparkEntry queries through the noop sink (the
   * Bench methodology) with a SparkListener attached, and print where the
   * time goes — jobs, stages, task time, shuffle bytes, GC, spill, and the
   * top stages by task time. The headless stand-in for the Spark UI's
-  * stage/SQL tabs (guide §1/§7); session settings mirror Bench exactly so
-  * numbers are comparable.
+  * stage/SQL tabs (guide §1/§7); the session comes from
+  * `GraftSession.builder` like Bench's, so numbers are comparable.
   *
   * Usage: tools/run.sh graft.tools.Profile <sfDir> <query> [query ...]
   * Env: SPARK_GRAFT_CPUS (default 32), PROFILE_PASSES (default 2).
@@ -38,12 +37,8 @@ object Profile {
     val names = args.drop(1).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val passes = sys.env.getOrElse("PROFILE_PASSES", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.GraftSession.builder("graft-profile", s"local[$cpus]", cpus.toInt)
+      .config("spark.ui.enabled", false)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Bench's warmup

@@ -151,17 +151,17 @@ class BucketedUpsertSpec extends SparkSpec {
     assert(ex2.getMessage.contains("double-apply"), ex2.getMessage)
   }
 
-  test("bucketed upsert in reliable mode reaches the same state") {
-    spark.sparkContext.setCheckpointDir(
-      Files.createTempDirectory("bu-ckpt").toString)
+  test("bucketed upsert under the durable posture reaches the same state") {
     val base = Files.createTempDirectory("bur").toString
     val b1 = Seq((1L, 1L, 10.0, false), (2L, 1L, 20.0, false))
       .toDF("k", "version", "value", "is_delete")
     val b2 = Seq((2L, 2L, 21.0, false), (1L, 2L, 0.0, true))
       .toDF("k", "version", "value", "is_delete")
-    for (b <- Seq(b1, b2))
-      UpsertSink.upsertBucketed(b, base, Seq("k"), "version", Some("is_delete"),
-        nBuckets = 8, reliable = true)
+    withDurableLineage { _ =>
+      for (b <- Seq(b1, b2))
+        UpsertSink.upsertBucketed(b, base, Seq("k"), "version", Some("is_delete"),
+          nBuckets = 8)
+    }
     assert(spark.read.parquet(base).select("k", "version", "value")
       .as[(Long, Long, Double)].collect().toSet === Set((2L, 2L, 21.0)))
   }

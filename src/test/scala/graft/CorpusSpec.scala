@@ -29,33 +29,41 @@ class CorpusSpec extends SparkSpec {
     assert(got.nonEmpty)
   }
 
-  test("reliable mode without a checkpoint dir fails fast with guidance") {
-    // deterministic regardless of suite order: clear the shared context's
-    // checkpoint dir for the duration of the check, then restore it
-    val sc = spark.sparkContext
-    val saved = sc.getCheckpointDir
-    sc.setCheckpointDir(null)
-    try {
+  test("the durable posture without a checkpoint dir fails fast with guidance") {
+    withLineagePosture("true", checkpointDir = None) {
       val e = intercept[IllegalArgumentException] {
-        graft.Lineage.truncate(Seq(1L).toDF("x"), reliable = true)
+        graft.Lineage.truncate(Seq(1L).toDF("x"))
       }
       assert(e.getMessage.contains("setCheckpointDir"))
-    } finally saved.foreach(sc.setCheckpointDir)
+      assert(e.getMessage.contains("spark.checkpoint.dir"))
+    }
   }
 
-  test("reliable mode produces identical clusters via durable checkpoints") {
-    val ckpt = java.nio.file.Files.createTempDirectory("cc-ckpt").toString
-    spark.sparkContext.setCheckpointDir(ckpt)
-    val reliable = Corpus.q59DupClusters(spark, sf, reliable = true)
-      .as[(Long, Long)].collect().toMap
+  test("a malformed posture setting throws instead of picking a posture") {
+    withLineagePosture("yes", checkpointDir = None) {
+      val e = intercept[IllegalArgumentException] {
+        graft.Lineage.truncate(Seq(1L).toDF("x"))
+      }
+      assert(e.getMessage.contains(graft.Lineage.ReliableKey), e.getMessage)
+    }
+  }
+
+  test("the durable posture produces identical clusters via durable spills") {
     val default = Corpus.q59DupClusters(spark, sf)
       .as[(Long, Long)].collect().toMap
-    assert(reliable === default)
-    // the final round's durable spill remains under the checkpoint dir
-    // (intermediate rounds are released as the loop advances)
-    val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt))
-      .filter(java.nio.file.Files.isRegularFile(_)).count()
-    assert(wrote > 0, "reliable=true must leave the final durable spill")
+    withDurableLineage { ckpt =>
+      val durable = Corpus.q59DupClusters(spark, sf)
+        .as[(Long, Long)].collect().toMap
+      assert(durable === default)
+      // the final round's durable spill backs the returned frame, so it
+      // outlives the call (intermediate rounds are released as the loop
+      // advances) until the between-queries drain deletes it
+      def spills() = java.nio.file.Files.walk(ckpt)
+        .filter(_.getFileName.toString.startsWith("graft-spill-")).count()
+      assert(spills() > 0, "the returned labels must be backed by a durable spill")
+      assert(Lineage.drainLeaked(spark) > 0)
+      assert(spills() === 0L, "drainLeaked must delete every unreleased spill")
+    }
   }
 
   test("cluster rep elects the max-quality member of each cluster") {

@@ -37,7 +37,7 @@ class JoinMvCrashSweepSpec extends SparkSpec with CrashSweepHarness {
     JoinMv.applyBatch(s"$root/jmv",
       "order_id", "aver", "aop", "cust_id",
       "cust_pk", "bver", "bop",
-      nBuckets = 2, innerJoin = false, reliable = false,
+      nBuckets = 2, innerJoin = false,
       changelogPath = Some(s"$root/cl"))(fa, fb, batchId)
 
   test("joinmv batch commit survives a crash at every mutation point " +

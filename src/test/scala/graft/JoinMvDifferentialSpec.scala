@@ -12,13 +12,23 @@ import graft.streaming.BucketedTable
   * (their rows come from disk, not from the merged frames), fk moves,
   * deletes on both sides, and keys listed twice within a batch. After
   * every round the MV, both entity tables, the (fk, pk) index and the
-  * round's changelog must equal what [[JoinMvModel]] computes. */
+  * round's changelog must equal what [[JoinMvModel]] computes, under
+  * either lineage posture: with the durable one every materialization of
+  * the batch is read back from its spill files. */
 class JoinMvDifferentialSpec extends SparkSpec {
   import spark.implicits._
 
   private val nBuckets = 8
 
   test("seeded rounds over a subset of buckets match a from-scratch recomputation") {
+    seededRounds()
+  }
+
+  test("the same rounds under the durable lineage posture") {
+    withDurableLineage(_ => seededRounds())
+  }
+
+  private def seededRounds(): Unit = {
     val root = Files.createTempDirectory("jmv-diff-").toString
     val rnd = new scala.util.Random(8128L)
     val factKeys = (0L until 64L).toIndexedSeq

@@ -29,7 +29,7 @@ class LineageDrainSpec extends SparkSpec {
   test("release() frees the localCheckpoint blocks, idempotently") {
     resetBlocks()
     assert(Lineage.leakedCount(spark) == 0)
-    val m = Lineage.truncate(spark.range(1000).toDF("id"), reliable = false)
+    val m = Lineage.truncate(spark.range(1000).toDF("id"))
     assert(m.df.count() == 1000)
     assert(Lineage.leakedCount(spark) == 1)
     assert(spark.sparkContext.getPersistentRDDs.nonEmpty)
@@ -57,6 +57,29 @@ class LineageDrainSpec extends SparkSpec {
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
       "drainLeaked left checkpoint blocks behind")
     assert(run() == r1, "a fresh query after the drain barrier must work")
+  }
+
+  test("durable posture: a Rank skeleton's spill directories register and " +
+      "drainLeaked deletes them") {
+    resetBlocks()
+    withDurableLineage { ckpt =>
+      def spills(): Long = java.nio.file.Files.walk(ckpt)
+        .filter(_.getFileName.toString.startsWith("graft-spill-")).count()
+      val df = spark.range(200).toDF("id").withColumn("g", col("id") % 3)
+      val got = Rank.groupRowNumberAndTotal(df, Seq("g"), Seq(col("id")))
+        .filter(col("rn") === 1).orderBy(col("g"))
+        .select(col("id"), col("n")).as[(Long, Long)].collect().toSeq
+      assert(got === Seq((0L, 67L), (1L, 67L), (2L, 66L)))
+      // the returned plan reads the skeleton's spills, so nothing in the
+      // operator could release them
+      assert(spills() >= 2)
+      assert(Lineage.leakedCount(spark) === spills())
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+        "the durable posture must not take localCheckpoint blocks")
+      assert(Lineage.drainLeaked(spark) >= 2)
+      assert(spills() === 0L, "drainLeaked left spill directories behind")
+      assert(Lineage.leakedCount(spark) === 0)
+    }
   }
 
   test("long-lived session: a query/drain loop accumulates nothing") {
@@ -97,7 +120,7 @@ class LineageDrainSpec extends SparkSpec {
   test("a released truncation's storage level is NONE (blocks gone, not " +
       "merely eligible for async cleaning)") {
     resetBlocks()
-    val m = Lineage.truncate(spark.range(10).toDF("id"), reliable = false)
+    val m = Lineage.truncate(spark.range(10).toDF("id"))
     m.df.count()
     val rdd = spark.sparkContext.getPersistentRDDs.values.headOption
     assert(rdd.nonEmpty)

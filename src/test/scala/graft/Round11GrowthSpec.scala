@@ -324,19 +324,19 @@ class Round11GrowthSpec extends SparkSpec {
 
   // --- durable-mode parity for the new iterative operators -------------
 
-  test("q172 and q180 produce identical results in reliable (durable-spill) mode") {
-    val ckpt = java.nio.file.Files.createTempDirectory("r11-ckpt").toString
-    spark.sparkContext.setCheckpointDir(ckpt)
-    val bpeDurable = Corpus.q172BpeMerges(spark, sf, reliable = true)
-      .as[(Long, String, String, String, Long)].collect().toSeq
+  test("q172 and q180 produce identical results under the durable posture") {
     val bpeDefault = Corpus.q172BpeMerges(spark, sf)
       .as[(Long, String, String, String, Long)].collect().toSeq
-    assert(bpeDurable === bpeDefault)
-    val erDurable = Dedup.q180ErPipeline(spark, sf, reliable = true)
-      .as[(Long, String, Long, String, Long)].collect().toSet
     val erDefault = Dedup.q180ErPipeline(spark, sf)
       .as[(Long, String, Long, String, Long)].collect().toSet
-    assert(erDurable === erDefault)
+    withDurableLineage { _ =>
+      val bpeDurable = Corpus.q172BpeMerges(spark, sf)
+        .as[(Long, String, String, String, Long)].collect().toSeq
+      assert(bpeDurable === bpeDefault)
+      val erDurable = Dedup.q180ErPipeline(spark, sf)
+        .as[(Long, String, Long, String, Long)].collect().toSet
+      assert(erDurable === erDefault)
+    }
   }
 
   // --- q193 link prediction --------------------------------------------

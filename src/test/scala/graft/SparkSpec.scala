@@ -9,6 +9,32 @@ trait SparkSpec extends AnyFunSuite {
   /** Smallest SF: specs check semantics; oracle parity runs at sf0.01. */
   val sf = "/root/testdata/sf0.001"
 
+  /** Run `body` under the durable lineage posture: [[Lineage.ReliableKey]]
+    * on and the context's checkpoint directory at a fresh temp directory,
+    * which `body` gets. Both are restored afterwards — every suite shares
+    * the session. */
+  def withDurableLineage[A](body: java.nio.file.Path => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
+    withLineagePosture("true", Some(dir.toString))(body(dir))
+  }
+
+  /** Run `body` with [[Lineage.ReliableKey]] set to `value` and the
+    * context's checkpoint directory at `checkpointDir` (`None` clears
+    * it), restoring both afterwards. */
+  def withLineagePosture[A](value: String, checkpointDir: Option[String])(body: => A): A = {
+    val sc = spark.sparkContext
+    val savedDir = sc.getCheckpointDir
+    val savedValue = spark.conf.getOption(Lineage.ReliableKey)
+    checkpointDir.fold(org.apache.spark.CheckpointDirs.set(sc, None))(sc.setCheckpointDir)
+    spark.conf.set(Lineage.ReliableKey, value)
+    try body
+    finally {
+      savedValue.fold(spark.conf.unset(Lineage.ReliableKey))(
+        spark.conf.set(Lineage.ReliableKey, _))
+      org.apache.spark.CheckpointDirs.set(sc, savedDir)
+    }
+  }
+
   /** Poll `what` every 200 ms until `p` holds or `timeoutMs` passes;
     * returns the LAST probe (the caller asserts on it — keeping the
     * failure message domain-specific). The sink poller behind every

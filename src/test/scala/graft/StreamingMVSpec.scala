@@ -56,6 +56,54 @@ class StreamingMVSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("a view started under the durable lineage posture reaches the same rows") {
+    // the posture is a session setting, so the builder needs no setter:
+    // the stream's batches truncate under whatever the session says
+    def run(): Set[(Long, Long, Double)] = {
+      val input = MemoryStream[(Long, Long, String, Double)]
+      val base = Files.createTempDirectory("mvdur").toString
+      val q = MaterializedView.newBuilder()
+        .setSource(input.toDF().toDF("user_id", "version", "op", "value"))
+        .setQuery(df => ChangelogOps.latestByKey(df, Seq("user_id"), "version")
+          .withColumn("is_delete", $"op" === "del"))
+        .setTargetPath(s"$base/target")
+        .setPrimaryKeys("user_id")
+        .setVersionColumn("version")
+        .setDeleteColumn("is_delete")
+        .setNumBuckets(4)
+        .setCheckpointLocation(s"$base/ckpt")
+        .build().start()
+      try {
+        input.addData((1L, 1L, "ins", 10.0), (2L, 1L, "ins", 20.0), (3L, 1L, "ins", 30.0))
+        q.processAllAvailable()
+        input.addData((2L, 2L, "del", 0.0), (1L, 2L, "upd", 11.0), (4L, 1L, "ins", 40.0))
+        q.processAllAvailable()
+      } finally q.stop()
+      spark.read.parquet(s"$base/target")
+        .select("user_id", "version", "value").as[(Long, Long, Double)].collect().toSet
+    }
+    val plain = run()
+    assert(plain === Set((1L, 2L, 11.0), (3L, 1L, 30.0), (4L, 1L, 40.0)))
+    withDurableLineage { _ =>
+      // spills land directly under the context's checkpoint directory
+      val spillRoot = java.nio.file.Paths.get(
+        new java.net.URI(spark.sparkContext.getCheckpointDir.get))
+      val watch = spillRoot.getFileSystem.newWatchService()
+      try {
+        spillRoot.register(watch, java.nio.file.StandardWatchEventKinds.ENTRY_CREATE)
+        assert(run() === plain)
+        import scala.jdk.CollectionConverters._
+        val created = Option(watch.poll()).toSeq.flatMap(_.pollEvents().asScala)
+          .map(_.context().toString)
+        assert(created.exists(_.startsWith("graft-spill-")),
+          s"the view's batches did not spill durably: $created")
+        assert(java.nio.file.Files.list(spillRoot).iterator().asScala
+          .forall(!_.getFileName.toString.startsWith("graft-spill-")),
+          "every batch releases its spills")
+      } finally watch.close()
+    }
+  }
+
   test("snapshot-then-stream bootstrap applies once and CDC maintains it") {
     // the reference's two-phase start: full snapshot at t0, changefeed
     // from t0 — the MV begins consistent with the table, not empty
