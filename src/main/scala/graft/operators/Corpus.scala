@@ -1151,9 +1151,9 @@ object Corpus {
     * each round's rank frame is lineage-truncated (plan growth is the
     * iterative-algorithm killer) and the previous round's spill released
     * the moment the next lands; the durable posture ([[graft.Lineage]])
-    * makes rounds durable for long chains on a lossy cluster. No driver-side data values at
-    * all — ranks stay distributed; only the loop counter lives on the
-    * driver. The dangling-mass term is zero BY CONSTRUCTION here (every
+    * makes rounds durable for long chains on a lossy cluster. No
+    * driver-side data values at all — ranks stay distributed; only the
+    * loop counter lives on the driver. The dangling-mass term is zero BY CONSTRUCTION here (every
     * node of an undirected edge list has out-degree ≥ 1), noted where a
     * directed variant would re-add it.
     *

@@ -151,7 +151,7 @@ class BucketedUpsertSpec extends SparkSpec {
     assert(ex2.getMessage.contains("double-apply"), ex2.getMessage)
   }
 
-  test("bucketed upsert under the durable posture reaches the same state") {
+  test("bucketed upsert in reliable mode reaches the same state") {
     val base = Files.createTempDirectory("bur").toString
     val b1 = Seq((1L, 1L, 10.0, false), (2L, 1L, 20.0, false))
       .toDF("k", "version", "value", "is_delete")

@@ -29,7 +29,7 @@ class CorpusSpec extends SparkSpec {
     assert(got.nonEmpty)
   }
 
-  test("the durable posture without a checkpoint dir fails fast with guidance") {
+  test("reliable mode without a checkpoint dir fails fast with guidance") {
     withLineagePosture("true", checkpointDir = None) {
       val e = intercept[IllegalArgumentException] {
         graft.Lineage.truncate(Seq(1L).toDF("x"))
@@ -48,7 +48,7 @@ class CorpusSpec extends SparkSpec {
     }
   }
 
-  test("the durable posture produces identical clusters via durable spills") {
+  test("reliable mode produces identical clusters via durable checkpoints") {
     val default = Corpus.q59DupClusters(spark, sf)
       .as[(Long, Long)].collect().toMap
     withDurableLineage { ckpt =>

@@ -324,7 +324,7 @@ class Round11GrowthSpec extends SparkSpec {
 
   // --- durable-mode parity for the new iterative operators -------------
 
-  test("q172 and q180 produce identical results under the durable posture") {
+  test("q172 and q180 produce identical results in reliable (durable-spill) mode") {
     val bpeDefault = Corpus.q172BpeMerges(spark, sf)
       .as[(Long, String, String, String, Long)].collect().toSeq
     val erDefault = Dedup.q180ErPipeline(spark, sf)
