@@ -17,7 +17,8 @@ package graft
 final case class GraftOptions(
     /** Micro-batch trigger cadence; 0 = as-fast-as-possible. */
     triggerMs: Long = 0L,
-    /** Bucket count for upsert targets (per-MV parallelism knob). */
+    /** Bucket count for upsert targets (per-MV parallelism knob), at
+      * least 1; a target's first commit pins it. */
     numBuckets: Int = 64,
     /** Writer-lease length for snapshot-store publishes. */
     lockLeaseMs: Long = graft.streaming.SnapshotStore.DefaultLockLeaseMs,

@@ -227,14 +227,17 @@ object Changelog {
       .select($"user_id", $"event_id".as("dim_event_id"),
         $"value".as("dim_value"), $"ts".as("valid_from"))
       .withColumn("valid_to", lead($"valid_from", 1).over(w))
+      .as("d")
     val probe = ev.filter($"event_type" === "click")
-      .select($"user_id", $"event_id", $"ts")
+      .select($"user_id", $"event_id", $"ts").as("p")
+    // both sides are filters of one frame: aliases keep the key equality
+    // from resolving to one column on both sides
     probe.join(dim,
-      probe("user_id") === dim("user_id") &&
-        $"ts" >= $"valid_from" &&
-        ($"valid_to".isNull || $"ts" < $"valid_to"))
-      .select(probe("user_id"), $"event_id", $"ts",
-        $"dim_event_id", $"dim_value", $"valid_from")
+      $"p.user_id" === $"d.user_id" &&
+        $"p.ts" >= $"d.valid_from" &&
+        ($"d.valid_to".isNull || $"p.ts" < $"d.valid_to"))
+      .select($"p.user_id", $"p.event_id", $"p.ts",
+        $"d.dim_event_id", $"d.dim_value", $"d.valid_from")
   }
 
   private implicit class Interp(val sc: StringContext) {

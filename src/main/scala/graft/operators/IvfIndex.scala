@@ -335,8 +335,8 @@ object IvfIndex {
         .agg(max(col("embedding")).as("embedding"))
       val delta = assignCells(deduped, centroids)
         .withColumn(VerCol, lit(batchId))
-      // touched cells: bounded by nCells — metadata-sized, same
-      // justification as BucketedTable.touchedBuckets
+      // touched cells: bounded by nCells — a metadata-sized collect,
+      // not a data read
       val touched = delta.select(col("cell")).distinct()
         .collect().map(_.getInt(0)).toSeq
       if (touched.nonEmpty)

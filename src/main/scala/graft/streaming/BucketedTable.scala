@@ -46,28 +46,13 @@ object BucketedTable {
   def bucketOf(keys: Seq[Column], nBuckets: Int): Column =
     pmod(xxhash64(keys: _*), lit(nBuckets.toLong)).cast("int")
 
-  /** Distinct bucket ids present in `df` (bounded by nBuckets, so the
-    * collect is a fixed-size metadata fetch, not a data read). One job and
-    * no shuffle: each task folds its partition's ids into a set and the
-    * driver unions the sets — `distinct()` would plan an exchange, which
-    * AQE runs as a job of its own ahead of the collect. Where the frame is
-    * materialized anyway, [[truncateObserving]] gets the same set from the
-    * materializing job instead, with no job of its own. */
-  def touchedBuckets(df: DataFrame): Seq[Int] =
-    df.select(col(BucketCol)).queryExecution.toRdd
-      .mapPartitions { rows =>
-        val seen = scala.collection.mutable.HashSet.empty[Int]
-        rows.foreach(r => seen += r.getInt(0))
-        Iterator.single(seen.toArray)
-      }
-      .collect().flatten.distinct.sorted.toSeq
-
   /** `graft.Lineage.truncate(df)` plus, for each of `sets`, the
     * sorted distinct int values it takes over `df` — typically bucket ids,
-    * `col(BucketCol)` or a [[bucketOf]] over another key. The sets are
-    * `collect_set` observations riding the job that materializes the frame
-    * (a frame read back only to learn its bucket set costs a job per
-    * call), so they must stay small: bucket ids are bounded by nBuckets.
+    * `col(BucketCol)` or a [[bucketOf]] over another key. This is how a
+    * writer learns the bucket set it touches: the sets are `collect_set`
+    * observations riding the job that materializes the frame (a frame
+    * read back only to learn its bucket set costs a job per call), so
+    * they must stay small: bucket ids are bounded by nBuckets.
     * With no `sets` it is a plain `truncate` and returns no sets. */
   def truncateObserving(df: DataFrame,
       sets: Column*): (graft.Lineage.Materialized, Seq[Seq[Int]]) = {
@@ -128,6 +113,36 @@ object BucketedTable {
         }
       }
     }
+  }
+
+  /** Replay marker in a table root: the last batch id whose writes the
+    * table holds ([[readMarker]], -1 if none). Writers whose replay is not
+    * a no-op by itself record it after their swaps, and return early on a
+    * batch id at or below it. */
+  private val MarkerFile = "_applied_batch"
+
+  def readMarker(spark: SparkSession, root: String): Long = {
+    val p = new Path(root, MarkerFile)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) -1L
+    else {
+      val in = fs.open(p)
+      try new String(in.readAllBytes(), "UTF-8").trim.toLong
+      finally in.close()
+    }
+  }
+
+  /** Record `batchId` as applied: written to a hidden sibling, then
+    * renamed over the marker, so a reader never sees a half-written id. */
+  def writeMarker(spark: SparkSession, root: String, batchId: Long): Unit = {
+    val p = new Path(root, MarkerFile)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = new Path(root, s".${MarkerFile}_tmp")
+    val out = fs.create(tmp, true)
+    try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
+    fs.delete(p, false)
+    if (!fs.rename(tmp, p))
+      throw new IllegalStateException(s"marker rename $tmp -> $p failed")
   }
 
   /** Sidecar in the table root holding the table's schema as JSON, pinned
@@ -226,9 +241,9 @@ object BucketedTable {
     * and overwrite the restored bucket with it — silent loss of every
     * prior key in the bucket (reconciling inside swapTouched alone runs
     * AFTER every caller has already read). A target holding NON-bucketed
-    * parquet (the flat whole-table layout) is rejected loudly: merging over
-    * it would silently ignore every existing row and leave a mixed
-    * directory no reader can parse.
+    * parquet (a flat layout) is rejected loudly: merging over it would
+    * silently ignore every existing row and leave a mixed directory no
+    * reader can parse.
     *
     * Schema contract: reads use the schema [[swapTouched]] pinned in the
     * [[SchemaFile]] sidecar, so no read runs parquet schema inference (a
@@ -247,7 +262,7 @@ object BucketedTable {
     if (children.exists(n => n.endsWith(".parquet") && !n.startsWith(".")))
       throw new IllegalStateException(
         s"$path holds a non-bucketed parquet layout; bucketed upsert would " +
-          "silently drop it. Migrate the table or use the whole-table sink (nBuckets <= 1).")
+          "silently drop it. Migrate the table first.")
     val buckets = children.filter(_.startsWith(s"$BucketCol="))
       .flatMap(_.stripPrefix(s"$BucketCol=").toIntOption).toSet
     new Opened(spark, path, buckets,

@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -27,6 +28,24 @@ object ChangelogOps {
     df.groupBy(keys.map(col): _*)
       .agg(max_by(struct(df.columns.toIndexedSeq.map(col): _*), col(versionCol)).as("__r"))
       .select(col("__r.*"))
+
+  /** Publish `df` as a view's output changelog for one batch: the
+    * directory `batch=<batchId>` under `root`. Written to `_staging_<id>`
+    * and renamed into place, so a half-written directory is never mistaken
+    * for a committed batch; a batch already published is skipped, which
+    * makes a replay a no-op. */
+  def publishBatch(df: DataFrame, root: String, batchId: Long): Unit = {
+    val dst = new Path(root, s"batch=$batchId")
+    val fs = dst.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    if (fs.exists(dst)) return
+    val staging = new Path(root, s"_staging_$batchId")
+    fs.delete(staging, true)
+    df.write.mode("overwrite").parquet(staging.toString)
+    fs.mkdirs(dst.getParent)
+    if (!fs.rename(staging, dst))
+      throw new IllegalStateException(
+        s"changelog rename $staging -> $dst failed; batch $batchId not emitted")
+  }
 
   /** Per-key running aggregate MV (count/sum/max) — the incremental form of
     * `q33_mv_incremental_agg`; streaming keyed state grows O(|keys|). */

@@ -82,17 +82,19 @@ object IncrementalMv {
 
     // 4a. merge deltas into the touched agg buckets (groups of those buckets
     // that got no delta ride along via the full join and are preserved)
-    val touchedAgg = touchedBuckets(deltas)
     // Replay guard for the agg table: the entity version guard above zeroes
     // deltas only once the ENTITY buckets have swapped, which happens after
     // the agg swap. A replay that crashed between the two swaps recomputes
     // non-empty deltas from the old entity state — the `_applied_batch`
     // marker (written atomically after the agg swap) tells such a replay
     // the agg already has them.
-    val aggFs = new org.apache.hadoop.fs.Path(aggPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val aggMarker = new org.apache.hadoop.fs.Path(aggPath, "_applied_batch")
-    if (touchedAgg.nonEmpty && readMarker(aggFs, aggMarker) < batchId) {
+    if (readMarker(spark, aggPath) < batchId) {
+    // materialized once, observing the agg bucket set on the way: the set
+    // is needed before the merge reads the agg buckets, and the merge then
+    // reads the deltas instead of running the diff pipeline a second time
+    val (deltasMat, Seq(touchedAgg)) = truncateObserving(deltas, col(BucketCol))
+    try if (touchedAgg.nonEmpty) {
+      val deltasM = deltasMat.df
       // the agg merge is ADDITIVE: a crash inside its swap left some
       // buckets with this batch's deltas applied and some without, and a
       // silent latest-wins reconciliation (readTouched would otherwise
@@ -104,10 +106,10 @@ object IncrementalMv {
       BucketedTable.assertCleanTrash(spark, aggPath)
       BucketedTable.markAdditive(spark, aggPath)
       val aggCurrent = readTouched(spark, aggPath, touchedAgg).getOrElse(
-        deltas.select(col(groupKey), lit(0L).as("cnt"), lit(0.0).as("total"),
+        deltasM.select(col(groupKey), lit(0L).as("cnt"), lit(0.0).as("total"),
           col(BucketCol)).limit(0))
       val merged = aggCurrent
-        .join(deltas, Seq(groupKey, BucketCol), "full")
+        .join(deltasM, Seq(groupKey, BucketCol), "full")
         .select(col(groupKey),
           (coalesce(col("cnt"), lit(0L)) + coalesce(col("__dc"), lit(0L))).as("cnt"),
           (coalesce(col("total"), lit(0.0)) + coalesce(col("__dv"), lit(0.0))).as("total"),
@@ -133,37 +135,23 @@ object IncrementalMv {
       // instants between the agg swap's last rename and the marker write —
       // and a crash INSIDE the swap itself is loud (assertCleanTrash above
       // refuses to merge over an interrupted additive swap), not silent.
-      // The write below is
-      // staged + atomically renamed so a half-written directory can never
-      // be mistaken for a committed batch.
       changelogPath.foreach { cl =>
-        val fs = new org.apache.hadoop.fs.Path(cl)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val dst = new org.apache.hadoop.fs.Path(cl, s"batch=$batchId")
-        if (!fs.exists(dst)) {
-          val oldA = aggCurrent.select(
-            col(groupKey), col("cnt").as("__oc"), col("total").as("__ot"))
-          val newA = mergedM.select(col(groupKey), col("cnt"), col("total"))
-          val out = oldA.join(newA, Seq(groupKey), "full")
-            // unchanged ride-along groups (same bucket, no delta) emit nothing
-            .filter(!(col("__oc") <=> col("cnt") && col("__ot") <=> col("total")))
-            .select(col(groupKey),
-              when(col("__oc").isNull, lit("I"))
-                .when(col("cnt").isNull, lit("D"))
-                .otherwise(lit("U")).as("op"),
-              col("cnt"), col("total"))
-          val staging = new org.apache.hadoop.fs.Path(cl, s"_staging_$batchId")
-          fs.delete(staging, true)
-          out.write.mode("overwrite").parquet(staging.toString)
-          fs.mkdirs(dst.getParent)
-          if (!fs.rename(staging, dst))
-            throw new IllegalStateException(
-              s"changelog rename $staging -> $dst failed; batch $batchId not emitted")
-        }
+        val oldA = aggCurrent.select(
+          col(groupKey), col("cnt").as("__oc"), col("total").as("__ot"))
+        val newA = mergedM.select(col(groupKey), col("cnt"), col("total"))
+        ChangelogOps.publishBatch(oldA.join(newA, Seq(groupKey), "full")
+          // unchanged ride-along groups (same bucket, no delta) emit nothing
+          .filter(!(col("__oc") <=> col("cnt") && col("__ot") <=> col("total")))
+          .select(col(groupKey),
+            when(col("__oc").isNull, lit("I"))
+              .when(col("cnt").isNull, lit("D"))
+              .otherwise(lit("U")).as("op"),
+            col("cnt"), col("total")), cl, batchId)
       }
       swapTouched(mergedM, aggPath, touchedAgg)
-      writeMarker(aggFs, aggMarker, batchId)
+      writeMarker(spark, aggPath, batchId)
       } finally mergedMat.release()
+    } finally deltasMat.release()
     }
 
     // 4b. upsert the touched entity buckets (latest-row-wins + tombstones)
@@ -172,30 +160,5 @@ object IncrementalMv {
       .filter(col(op) =!= "delete")
     swapTouched(entity, entityPath, touchedEntity)
     } finally compactedMat.release()
-  }
-
-  /** Last batchId whose deltas were applied to this table; -1 if none.
-    * Underscore-prefixed, so parquet readers of the directory ignore it. */
-  private def readMarker(
-      fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Long =
-    if (!fs.exists(p)) -1L
-    else {
-      val in = fs.open(p)
-      try new String(in.readAllBytes(), "UTF-8").trim.toLong
-      finally in.close()
-    }
-
-  /** Atomic publish: write to a sibling tmp file, rename over the marker —
-    * a reader never observes a half-written batchId. */
-  private def writeMarker(
-      fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path, batchId: Long): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent, p.getName + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-    fs.delete(p, false)
-    if (!fs.rename(tmp, p))
-      throw new IllegalStateException(s"failed to publish batch marker $p")
   }
 }

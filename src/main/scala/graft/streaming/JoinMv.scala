@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -199,24 +198,6 @@ object JoinMv {
       .filter(col(op) =!= "delete")
   }
 
-  private def readMarker(fs: org.apache.hadoop.fs.FileSystem, p: Path): Long =
-    if (!fs.exists(p)) -1L
-    else {
-      val in = fs.open(p)
-      try new String(in.readAllBytes(), "UTF-8").trim.toLong
-      finally in.close()
-    }
-
-  private def writeMarker(fs: org.apache.hadoop.fs.FileSystem, p: Path,
-      batchId: Long): Unit = {
-    val tmp = new Path(p.getParent, s".${p.getName}_tmp")
-    val out = fs.create(tmp, true)
-    try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-    fs.delete(p, false)
-    if (!fs.rename(tmp, p))
-      throw new IllegalStateException(s"marker rename $tmp -> $p failed")
-  }
-
   /** Apply one micro-batch of both changelogs; see object doc. `batchA`
     * carries `(pkA, verA, opA, fk, payload...)`, `batchB`
     * `(pkB, verB, opB, payload...)`; `op` value "delete" tombstones. */
@@ -235,11 +216,8 @@ object JoinMv {
     require(overlap.isEmpty,
       s"left/right column names must be disjoint, both have: $overlap")
 
-    val fs = new Path(basePath).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
     pinBucketCount(spark, basePath, nBuckets)
-    val marker = new Path(mvPath, "_applied_batch")
-    if (readMarker(fs, marker) >= batchId) return // full replay of a done batch
+    if (readMarker(spark, mvPath) >= batchId) return // full replay of a done batch
     // a drifted batch fails before either side writes: the left and right
     // chains commit concurrently, so a drift only one chain's swap caught
     // would leave the other side's table already changed
@@ -395,48 +373,37 @@ object JoinMv {
             rightRead.trySuccess(())
             val curMv = mv.read(touchedMv).getOrElse(newOut.limit(0))
             changelogPath.foreach { cl => phased(acc, "changelog") {
-              val clFs = new Path(cl).getFileSystem(
-                spark.sparkContext.hadoopConfiguration)
-              val dst = new Path(cl, s"batch=$batchId")
-              if (!clFs.exists(dst)) {
-                val dataCols = outCols.toIndexedSeq.filterNot(_ == pkA)
-                // presence flags, not struct-null tests: a full join's
-                // missing side nulls the COLUMNS, and a struct of null
-                // fields is still a non-null struct
-                val oldRows = curMv
-                  .join(affected.select(col("__k").as(pkA)), Seq(pkA),
-                    "left_semi")
-                  .select(col(pkA) +: lit(true).as("__has_old") +:
-                    dataCols.map(c => col(c).as(s"__o_$c")): _*)
-                val newRows = newOut
-                  .select(col(pkA) +: lit(true).as("__has_new") +:
-                    dataCols.map(col): _*)
-                // both images ride along (Debezium's before/after shape):
-                // a downstream MV maintained from this changelog needs
-                // the OLD row to retract U/D contributions without ever
-                // re-reading this MV's state
-                val diff = oldRows.join(newRows, Seq(pkA), "full")
-                  .filter(col("__has_old").isNull ||
-                    col("__has_new").isNull ||
-                    !(struct(dataCols.map(c => col(s"__o_$c")): _*) <=>
-                      struct(dataCols.map(col): _*)))
-                  .select(col(pkA),
-                    when(col("__has_old").isNull, lit("I"))
-                      .when(col("__has_new").isNull, lit("D"))
-                      .otherwise(lit("U")).as("__op"),
-                    when(col("__has_new").isNull, lit(null))
-                      .otherwise(struct(dataCols.map(col): _*)).as("__row"),
-                    when(col("__has_old").isNull, lit(null))
-                      .otherwise(struct(dataCols.map(c =>
-                        col(s"__o_$c").as(c)): _*)).as("__old"))
-                val staging = new Path(cl, s"_staging_$batchId")
-                clFs.delete(staging, true)
-                diff.write.mode("overwrite").parquet(staging.toString)
-                clFs.mkdirs(dst.getParent)
-                if (!clFs.rename(staging, dst))
-                  throw new IllegalStateException(
-                    s"changelog rename $staging -> $dst failed")
-              }
+              val dataCols = outCols.toIndexedSeq.filterNot(_ == pkA)
+              // presence flags, not struct-null tests: a full join's
+              // missing side nulls the COLUMNS, and a struct of null
+              // fields is still a non-null struct
+              val oldRows = curMv
+                .join(affected.select(col("__k").as(pkA)), Seq(pkA),
+                  "left_semi")
+                .select(col(pkA) +: lit(true).as("__has_old") +:
+                  dataCols.map(c => col(c).as(s"__o_$c")): _*)
+              val newRows = newOut
+                .select(col(pkA) +: lit(true).as("__has_new") +:
+                  dataCols.map(col): _*)
+              // both images ride along (Debezium's before/after shape):
+              // a downstream MV maintained from this changelog needs
+              // the OLD row to retract U/D contributions without ever
+              // re-reading this MV's state
+              val diff = oldRows.join(newRows, Seq(pkA), "full")
+                .filter(col("__has_old").isNull ||
+                  col("__has_new").isNull ||
+                  !(struct(dataCols.map(c => col(s"__o_$c")): _*) <=>
+                    struct(dataCols.map(col): _*)))
+                .select(col(pkA),
+                  when(col("__has_old").isNull, lit("I"))
+                    .when(col("__has_new").isNull, lit("D"))
+                    .otherwise(lit("U")).as("__op"),
+                  when(col("__has_new").isNull, lit(null))
+                    .otherwise(struct(dataCols.map(col): _*)).as("__row"),
+                  when(col("__has_old").isNull, lit(null))
+                    .otherwise(struct(dataCols.map(c =>
+                      col(s"__o_$c").as(c)): _*)).as("__old"))
+              ChangelogOps.publishBatch(diff, cl, batchId)
             } }
             phased(acc, "mv_swap") {
               val kept = curMv
@@ -466,7 +433,7 @@ object JoinMv {
         throw first
       }
     } finally held.forEach(_.release())
-    phased(acc, "marker")(writeMarker(fs, marker, batchId))
+    phased(acc, "marker")(writeMarker(spark, mvPath, batchId))
     lastPhases = {
       import scala.jdk.CollectionConverters._
       acc.iterator().asScala.toSeq

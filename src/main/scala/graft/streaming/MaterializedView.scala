@@ -134,21 +134,19 @@ final class MaterializedView private (
     // caller's sink (e.g. [[JdbcUpsertSink]] — the reference's target IS
     // the database); bootstrap and stream go through the SAME one
     val sinkFn: (DataFrame, Long) => Unit = sinkOverride.getOrElse(
-      UpsertSink.forStream(
-        targetPath, pks, versionColumn, deleteColumn, numBuckets))
+      (batch, _) => UpsertSink.upsertBucketed(
+        batch, targetPath, pks, versionColumn, deleteColumn, numBuckets))
     // SNAPSHOT-THEN-STREAM bootstrap — the reference's two-phase start
     // (FlinkTikvConsumer.java:133-159: full scan of the source table at a
     // start timestamp emitted as INSERT rows, then the changefeed from
     // that timestamp): the snapshot runs through the SAME query transform
     // and the SAME upsert path as every micro-batch, once, before the
     // stream starts. Exactly-once across restarts via a marker in the
-    // CHECKPOINT location (not the target: the flat-table upsert path
-    // atomically replaces the whole target directory every batch, and
-    // checkpoint lifetime is the right scope anyway — wiping the
-    // checkpoint to reprocess the feed from scratch correctly re-applies
-    // the snapshot too). A crash between upsert and marker re-applies on
-    // the next start, which the latest-by-key merge makes a no-op (same
-    // rows, same versions). The feed must begin at the snapshot
+    // CHECKPOINT location: checkpoint lifetime is the right scope — wiping
+    // the checkpoint to reprocess the feed from scratch correctly
+    // re-applies the snapshot too. A crash between upsert and marker
+    // re-applies on the next start, which the latest-by-key merge makes a
+    // no-op (same rows, same versions). The feed must begin at the snapshot
     // timestamp — changes BEFORE it would be stale against the
     // bootstrapped state and lose to it on version, which is exactly the
     // right outcome.
@@ -222,10 +220,11 @@ object MaterializedView {
     def setDeleteColumn(c: String): Builder = { deleteColumn = Some(c); this }
     def setCheckpointLocation(p: String): Builder = { checkpointLocation = p; this }
     def setTrigger(t: Trigger): Builder = { trigger = t; this }
-    /** Target bucket count (TiFlinkApp per-MV parallelism knob analog).
-      * Default 64: each micro-batch rewrites only the buckets holding its
-      * keys. `<= 1` switches to whole-table merge — only sensible for
-      * dimension-sized targets. */
+    /** Target bucket count (TiFlinkApp per-MV parallelism knob analog),
+      * at least 1. Default 64: each micro-batch rewrites only the buckets
+      * holding its keys. `1` keeps the view in one bucket directory,
+      * swapped whole by one rename each batch. The count is pinned by the
+      * first commit: a restart with another count fails loudly. */
     def setNumBuckets(n: Int): Builder = { numBuckets = n; this }
     /** Recreate the target from scratch on start: drop target + checkpoint
       * (TiFlinkApp's dropOldTable/forceNewTable). */
@@ -236,8 +235,7 @@ object MaterializedView {
       * snapshot phase, FlinkTikvConsumer.java:133-159). Applied once
       * through the same query + upsert path before the stream starts;
       * exactly-once across restarts via a CHECKPOINT-scoped marker
-      * (`<checkpointLocation>/_graft_bootstrap_done` — the target dir is
-      * atomically replaced per batch, so a marker could not live there). */
+      * (`<checkpointLocation>/_graft_bootstrap_done`). */
     def setBootstrap(snapshot: DataFrame): Builder = {
       bootstrap = Some(snapshot); this
     }
@@ -283,6 +281,7 @@ object MaterializedView {
       require(targetPath != null || sinkOverride.isDefined,
         "targetPath must be specified (or a custom sink set)")
       require(checkpointLocation != null, "checkpointLocation must be specified")
+      require(numBuckets >= 1, s"numBuckets must be >= 1, got $numBuckets")
       val q = catalogDir match {
         case Some(d) =>
           val inner = query

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -44,24 +43,6 @@ import org.apache.spark.sql.functions._
 object StreamingScd2 {
   import BucketedTable._
 
-  private def readMarker(fs: org.apache.hadoop.fs.FileSystem, p: Path): Long =
-    if (!fs.exists(p)) -1L
-    else {
-      val in = fs.open(p)
-      try new String(in.readAllBytes(), "UTF-8").trim.toLong
-      finally in.close()
-    }
-
-  private def writeMarker(fs: org.apache.hadoop.fs.FileSystem, p: Path,
-      batchId: Long): Unit = {
-    val tmp = new Path(p.getParent, s".${p.getName}_tmp")
-    val out = fs.create(tmp, true)
-    try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-    fs.delete(p, false)
-    if (!fs.rename(tmp, p))
-      throw new IllegalStateException(s"marker rename $tmp -> $p failed")
-  }
-
   /** Apply one micro-batch of events to the history at `path`. `batch`
     * carries `keyCol`, `fromCol` (the version timestamp — becomes
     * `valid_from`), `tieCol` (same-timestamp total order), and payload;
@@ -70,11 +51,8 @@ object StreamingScd2 {
       tieCol: String, nBuckets: Int = 16)
       (batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val fs = new Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
     pinBucketCount(spark, path, nBuckets)
-    val marker = new Path(path, "_applied_batch")
-    if (readMarker(fs, marker) >= batchId) return
+    if (readMarker(spark, path) >= batchId) return
 
     val newRows = batch
       .withColumnRenamed(fromCol, "valid_from")
@@ -85,7 +63,7 @@ object StreamingScd2 {
     val (newMat, Seq(touched)) =
       truncateObserving(newRows, col(BucketCol))
     try {
-      if (touched.isEmpty) { writeMarker(fs, marker, batchId); return }
+      if (touched.isEmpty) { writeMarker(spark, path, batchId); return }
       val cur = readTouched(spark, path, touched).getOrElse(newMat.df.limit(0))
 
       // a crash between swapTouched and writeMarker leaves the batch's
@@ -109,7 +87,7 @@ object StreamingScd2 {
         col(s"__new.$c") <=> col(s"__cur.$c")).reduce(_ && _)
       val fresh = newMat.df.as("__new")
         .join(curData, antiCond, "left_anti")
-      if (fresh.isEmpty) { writeMarker(fs, marker, batchId); return }
+      if (fresh.isEmpty) { writeMarker(spark, path, batchId); return }
 
       // disorder is loud: every key's incoming versions must order
       // strictly after its stored history (one bounded collect)
@@ -131,7 +109,7 @@ object StreamingScd2 {
         .withColumn("valid_to", lead(col("valid_from"), 1).over(w))
         .withColumn("is_current", col("valid_to").isNull)
       swapTouched(recomputed, path, touched)
-      writeMarker(fs, marker, batchId)
+      writeMarker(spark, path, batchId)
     } finally newMat.release()
   }
 }

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
-import graft.streaming.{BucketedTable, IncrementalMv, UpsertSink}
+import graft.streaming.{BucketedTable, ChangelogOps, IncrementalMv, UpsertSink}
 
 /** The O(delta) property of the bucketed MV write path: a micro-batch
   * rewrites ONLY the bucket directories holding its keys; every other
@@ -41,13 +41,16 @@ class BucketedUpsertSpec extends SparkSpec {
       .toDF("k", "version", "value", "is_delete")
     val b2 = Seq((2L, 2L, 21.0, false), (3L, 2L, 0.0, true), (4L, 1L, 40.0, false))
       .toDF("k", "version", "value", "is_delete")
-    for (b <- Seq(b1, b2)) {
-      UpsertSink.upsertBatch(b, s"$base/flat", Seq("k"), "version", Some("is_delete"))
+    for (b <- Seq(b1, b2))
       UpsertSink.upsertBucketed(b, s"$base/bucketed", Seq("k"), "version", Some("is_delete"), 8)
-    }
     def state(p: String) = spark.read.parquet(p)
       .select("k", "version", "value").as[(Long, Long, Double)].collect().toSet
-    assert(state(s"$base/bucketed") === state(s"$base/flat"))
+    // the whole-table model: latest version per key over every batch, then
+    // tombstones dropped
+    val model = ChangelogOps.latestByKey(b1.unionByName(b2), Seq("k"), "version")
+      .filter(!$"is_delete")
+      .select("k", "version", "value").as[(Long, Long, Double)].collect().toSet
+    assert(state(s"$base/bucketed") === model)
     assert(state(s"$base/bucketed") === Set((1L, 1L, 10.0), (2L, 2L, 21.0), (4L, 1L, 40.0)))
     // replay of b2 is a no-op on values
     UpsertSink.upsertBucketed(b2, s"$base/bucketed", Seq("k"), "version", Some("is_delete"), 8)
@@ -196,13 +199,14 @@ class BucketedUpsertSpec extends SparkSpec {
   test("bucketed upsert rejects a flat (non-bucketed) target loudly") {
     val target = Files.createTempDirectory("buflat").toString + "/t"
     val b = Seq((1L, 1L, 1.0, false)).toDF("k", "version", "value", "is_delete")
-    UpsertSink.upsertBatch(b, target, Seq("k"), "version", Some("is_delete"))
+    b.write.parquet(target)
     val e = intercept[IllegalStateException] {
       UpsertSink.upsertBucketed(b, target, Seq("k"), "version", Some("is_delete"), 4)
     }
     assert(e.getMessage.contains("non-bucketed"))
-    // the flat table is untouched
+    // the flat table is untouched: no rows changed, no sidecar pinned
     assert(spark.read.parquet(target).count() === 1)
+    assert(!Files.exists(Paths.get(target, "_n_buckets")))
   }
 
   test("BinaryType round-trips through the upsert sink") {
@@ -314,6 +318,23 @@ class BucketedUpsertSpec extends SparkSpec {
       .select($"k", $"v").as[(Long, String)].collect().toSet === before)
     // idempotent: nothing left to do
     assert(BucketedTable.compact(spark, path) === Nil)
+  }
+
+  test("bucketed upsert pins its bucket count: a changed count fails loudly") {
+    // with 64 buckets some keys hash to a bucket >= 16 that the 16-bucket
+    // table never had: an unpinned upsert would write them there beside
+    // their old rows, and the table would hold those keys twice
+    val target = Files.createTempDirectory("bupin").toString + "/t"
+    def batch(version: Long) = (1L to 40L).map(k => (k, version, k * 1.0, false))
+      .toDF("k", "version", "value", "is_delete")
+    UpsertSink.upsertBucketed(batch(1L), target, Seq("k"), "version", Some("is_delete"), 16)
+    val e = intercept[IllegalStateException] {
+      UpsertSink.upsertBucketed(batch(2L), target, Seq("k"), "version", Some("is_delete"), 64)
+    }
+    assert(e.getMessage.contains("nBuckets=16") && e.getMessage.contains("nBuckets=64"))
+    val got = spark.read.parquet(target).select("k", "version").as[(Long, Long)].collect()
+    assert(got.map(_._1).sorted.toSeq === (1L to 40L))
+    assert(got.forall(_._2 == 1L), "a refused batch must change nothing")
   }
 
   test("pinBucketCount: mismatch fails loudly, concurrent first pins agree") {

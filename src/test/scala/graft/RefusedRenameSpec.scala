@@ -47,46 +47,24 @@ class RefusedRenameSpec extends SparkSpec {
   private def b1 = batch((1L, 1L, 10.0), (2L, 1L, 20.0))
   private def b2 = batch((1L, 2L, 11.0), (3L, 1L, 30.0))
 
-  test("upsertBatch: a refused move-aside leaves the snapshot in place, stage not nested") {
-    val (root, local) = fresh("refuse-aside")
-    UpsertSink.upsertBatch(b1, s"$root/t", Keys, "version")
-    val before = files(s"$local/t")
-    InstrumentedFs.refuseRename("/t")
-    intercept[IllegalStateException](UpsertSink.upsertBatch(b2, s"$root/t", Keys, "version"))
-    assert(InstrumentedFs.pendingHooks === 0, "the refusal never fired")
-    assert(files(s"$local/t") === before)
-    assert(state(s"$local/t") === first)
-    UpsertSink.upsertBatch(b2, s"$root/t", Keys, "version")
-    assert(state(s"$local/t") === merged)
-  }
-
-  test("upsertBatch: a refused publish restores the previous snapshot") {
-    val (root, local) = fresh("refuse-publish")
-    UpsertSink.upsertBatch(b1, s"$root/t", Keys, "version")
-    val before = files(s"$local/t")
-    InstrumentedFs.refuseRename("/t__stage")
-    intercept[IllegalStateException](UpsertSink.upsertBatch(b2, s"$root/t", Keys, "version"))
-    assert(InstrumentedFs.pendingHooks === 0, "the refusal never fired")
-    assert(files(s"$local/t") === before)
-    assert(!Files.exists(Paths.get(s"$local/t__old")))
-    UpsertSink.upsertBatch(b2, s"$root/t", Keys, "version")
-    assert(state(s"$local/t") === merged)
-  }
-
   test("swapTouched: a refused bucket rename-out fails before the rename-in") {
-    val (root, local) = fresh("refuse-bucket")
-    // one bucket, so the batch touches exactly that bucket
-    UpsertSink.upsertBucketed(b1, s"$root/live", Keys, "version", nBuckets = 1)
-    val bucket = new java.io.File(s"$local/live").list().filter(_.startsWith("__bucket=")).toSeq
-    assert(bucket.size === 1)
-    val before = files(s"$local/live")
-    InstrumentedFs.refuseRename(s"live/${bucket.head}")
-    intercept[IllegalStateException](
-      UpsertSink.upsertBucketed(b2, s"$root/live", Keys, "version", nBuckets = 1))
-    assert(InstrumentedFs.pendingHooks === 0, "the refusal never fired")
-    assert(files(s"$local/live") === before)
-    assert(state(s"$local/live") === first)
-    UpsertSink.upsertBucketed(b2, s"$root/live", Keys, "version", nBuckets = 1)
-    assert(state(s"$local/live") === merged)
+    // one bucket, so the batch touches exactly that bucket: a refused
+    // rename-out of the live bucket, then a refused rename-in of the staged
+    // one (the displaced bucket is moved back)
+    for (refused <- Seq("live/__bucket=0", "live__stage/__bucket=0")) {
+      val (root, local) = fresh("refuse-bucket")
+      UpsertSink.upsertBucketed(b1, s"$root/live", Keys, "version", nBuckets = 1)
+      assert(new java.io.File(s"$local/live").list()
+        .filter(_.startsWith("__bucket=")).toSeq === Seq("__bucket=0"))
+      val before = files(s"$local/live")
+      InstrumentedFs.refuseRename(refused)
+      intercept[IllegalStateException](
+        UpsertSink.upsertBucketed(b2, s"$root/live", Keys, "version", nBuckets = 1))
+      assert(InstrumentedFs.pendingHooks === 0, s"the refusal of $refused never fired")
+      assert(files(s"$local/live") === before, s"after refusing $refused")
+      assert(state(s"$local/live") === first)
+      UpsertSink.upsertBucketed(b2, s"$root/live", Keys, "version", nBuckets = 1)
+      assert(state(s"$local/live") === merged)
+    }
   }
 }

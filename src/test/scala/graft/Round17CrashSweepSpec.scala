@@ -112,42 +112,6 @@ class Round17CrashSweepSpec extends SparkSpec with CrashSweepHarness {
     assert(swept >= 10, s"suspiciously few crash points ($swept)")
   }
 
-  // ---------------------------------------------------------------- C
-  test("whole-table upsert survives a crash at every mutation point (parked snapshot)") {
-    def apply(root: String, rows: Seq[(Int, String, Long)]): Unit =
-      UpsertSink.upsertBatch(rows.toDF("k", "v", "ver").coalesce(1),
-        s"$root/tbl", Seq("k"), "ver")
-
-    val batch1 = (1 to 8).map(k => (k, "v1", 1L))
-    val batch2 = Seq((1, "v2", 2L), (9, "v2", 2L))
-    val expected = ((2 to 8).map(k => (k, "v1")) ++
-      Seq((1, "v2"), (9, "v2"))).toSet
-
-    val tpl = Files.createTempDirectory("tpl-flat-").toFile
-    InstrumentedFs.reset()
-    apply(s"ifs://$tpl", batch1)
-
-    val swept = sweep("flat-upsert", tpl,
-      attempt = (root, _) => apply(root, batch2),
-      recover = (root, local) => {
-        // MID-CRASH: the prior snapshot is never lost — target or the
-        // parked __old copy exists at every crash point
-        assert(new java.io.File(local, "tbl").exists() ||
-          new java.io.File(local, "tbl__old").exists(),
-          "both the target and the parked snapshot are gone")
-        apply(root, batch2)
-      },
-      invariant = (root, local) => {
-        val got = spark.read.parquet(s"$root/tbl")
-          .select("k", "v").as[(Int, String)].collect().toSet
-        assert(got === expected, "whole-table target diverged after replay")
-        assert(!new java.io.File(local, "tbl__old").exists(),
-          "parked snapshot left behind after a completed replay")
-      })
-    info(s"whole-table upsert: $swept crash points swept green")
-    assert(swept >= 5, s"suspiciously few crash points ($swept)")
-  }
-
   // ---------------------------------------------------------------- D
   test("oracle begin/commit/gc survives a crash at every mutation point") {
     val conf = spark.sparkContext.hadoopConfiguration

@@ -359,4 +359,15 @@ class StreamingMVSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](mv.start())
     assert(e.getMessage.contains("PrimaryKeys must be contained"))
   }
+
+  test("builder refuses a bucket count below 1") {
+    val input = MemoryStream[(Long, Long)]
+    val e = intercept[IllegalArgumentException](MaterializedView.newBuilder()
+      .setSource(input.toDF().toDF("k", "v"))
+      .setTargetPath("/tmp/x").setCheckpointLocation("/tmp/y")
+      .setPrimaryKeys("k").setVersionColumn("v")
+      .setNumBuckets(0)
+      .build())
+    assert(e.getMessage.contains("numBuckets must be >= 1, got 0"))
+  }
 }
