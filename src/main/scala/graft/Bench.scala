@@ -42,12 +42,9 @@ object Bench {
     // Lineage.drainLeaked frees graft's truncations, durable spills
     // included; the broader unpersist-all after it also covers any
     // non-Lineage persistence.
-    val noDrain = sys.env.contains("SPARK_GRAFT_NO_DRAIN") // A/B escape hatch
     def drainLeakedBlocks(): Unit = {
-      if (!noDrain) {
-        Lineage.drainLeaked(spark)
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      }
+      Lineage.drainLeaked(spark)
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
       System.gc()
     }
     // dev loop: SPARK_GRAFT_ONLY=q148_prefix_join,q134_pagerank restricts

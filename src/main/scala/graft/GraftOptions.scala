@@ -11,8 +11,8 @@ package graft
  * a weird runtime default.
  *
  * Consumed by [[graft.streaming.MaterializedView.Builder.setOptions]]
- * (trigger cadence, bucket count, watermark, rebuild mode) and by the
- * snapshot-store sinks (epoch retention, writer-lease length).
+ * (trigger cadence, bucket count, watermark, rebuild mode); the TCP
+ * timestamp oracle takes the auth token.
  */
 final case class GraftOptions(
     /** Micro-batch trigger cadence; 0 = as-fast-as-possible. */
@@ -20,12 +20,8 @@ final case class GraftOptions(
     /** Bucket count for upsert targets (per-MV parallelism knob), at
       * least 1; a target's first commit pins it. */
     numBuckets: Int = 64,
-    /** Writer-lease length for snapshot-store publishes. */
-    lockLeaseMs: Long = graft.streaming.SnapshotStore.DefaultLockLeaseMs,
     /** Event-time watermark: (column, delay) — both keys or neither. */
     watermark: Option[(String, String)] = None,
-    /** Committed epochs retained per snapshot store. */
-    snapshotKeep: Int = 3,
     /** Recreate target + checkpoint on start (TiFlinkApp dropOldTable). */
     dropIfExists: Boolean = false,
     /** Shared secret for the TCP timestamp oracle ([[graft.streaming
@@ -37,16 +33,13 @@ final case class GraftOptions(
 object GraftOptions {
   val TriggerMs = "graft.trigger.ms"
   val Buckets = "graft.buckets"
-  val LockLeaseMs = "graft.lock.lease.ms"
   val WatermarkColumn = "graft.watermark.column"
   val WatermarkDelay = "graft.watermark.delay"
-  val SnapshotKeep = "graft.snapshot.keep"
   val DropIfExists = "graft.drop.if.exists"
   val TsoAuthToken = "graft.tso.auth.token"
 
-  val knownKeys: Set[String] = Set(TriggerMs, Buckets, LockLeaseMs,
-    WatermarkColumn, WatermarkDelay, SnapshotKeep, DropIfExists,
-    TsoAuthToken)
+  val knownKeys: Set[String] = Set(TriggerMs, Buckets, WatermarkColumn,
+    WatermarkDelay, DropIfExists, TsoAuthToken)
 
   /** Parse + validate a string option map (the form a deployment template
     * or SQL `OPTIONS (...)` clause produces). Every failure names the key
@@ -115,10 +108,7 @@ object GraftOptions {
     GraftOptions(
       triggerMs = long(TriggerMs, min = 0L, default = 0L),
       numBuckets = int(Buckets, min = 1, default = 64),
-      lockLeaseMs = long(LockLeaseMs, min = 1000L,
-        default = graft.streaming.SnapshotStore.DefaultLockLeaseMs),
       watermark = watermark,
-      snapshotKeep = int(SnapshotKeep, min = 1, default = 3),
       dropIfExists = bool(DropIfExists, default = false),
       tsoAuthToken = tsoAuthToken)
   }

@@ -16,108 +16,19 @@ import graft.sources.Tables
 object Corpus {
 
   // ---------------------------------------------------------------- C13
-  /** Connected components over the near-dup pair graph (HashMin label
-    * propagation): every involved document gets the min doc_id of its
-    * duplicate component as `cluster_id`; `cluster_id == doc_id` is then
-    * the canonical-document filter a dedup pipeline keeps.
-    *
-    * Scale shape: iterative hash joins on the edge list — O(E) shuffled per
-    * round, rounds = component diameter (near-dup components are shallow;
-    * `maxIters` guards degenerate chains). Lineage is truncated every round
-    * ([[graft.Lineage]]), without which the plan doubles per iteration;
-    * under the durable posture each round spills durably, so a
-    * 1000-executor run losing one executor resumes from the last round
-    * instead of restarting the whole loop. Rounds are released as soon as
-    * the next lands — only the FINAL round's materialization (which backs
-    * the returned frame) outlives the call, until the caller releases it
-    * with `Lineage.drainLeaked` between queries. The only
-    * driver-side values are the convergence count and loop bound —
-    * aggregates, never data. */
+  /** Connected components over the near-dup pair graph
+    * ([[Graph.components]]): every involved document gets the min doc_id
+    * of its duplicate component as `cluster_id`; `cluster_id == doc_id` is
+    * then the canonical-document filter a dedup pipeline keeps. The final
+    * round's materialization backs the returned frame and outlives the
+    * call, until the caller releases it with `Lineage.drainLeaked` between
+    * queries. */
   def q59DupClusters(spark: SparkSession, dir: String,
       threshold: Double = 0.3, maxIters: Int = 20): DataFrame = {
     val pairs = Dedup.q43NgramJaccard(spark, dir, threshold)
       .select(col("doc_a"), col("doc_b"))
-    // symmetrize via ONE explode, not unionAll of two plan references: the
-    // union's branches each contain the full q43 candidate+verify subtree,
-    // and only its exchanges are deduplicated (ReuseExchange) — the salted
-    // join + intersect kernel above them executed TWICE per r19 profiling
-    val edgesM0 = graft.Lineage.truncate( // materialize once; reused below
-      Graph.symmetrized(pairs, "doc_a", "doc_b")
-        // lazy is safe HERE only because edgesM's truncate below is EAGER
-        // and runs before edgesM0.release()
-        .repartition(col("src")), eager = false)
-    // SELF-LOOPS make each HashMin round ONE join + ONE aggregate:
-    // min over in-neighbors INCLUDING self ≡ least(own, neighbor-min),
-    // so the per-round left-join-and-least (one more exchange + its AQE
-    // stage-jobs every round) disappears. Built from the materialized
-    // edge frame (two cheap checkpoint reads), then materialized itself —
-    // the loop must join a checkpoint, not re-run the union each round.
-    val edgesM = graft.Lineage.truncate(
-      edgesM0.df.unionAll(edgesM0.df.select(col("dst")).distinct()
-        .select(col("dst").as("src"), col("dst"))))
-    edgesM0.release()
-    val edges = edgesM.df
-    // CONVERGENCE: labels only ever DECREASE under min-propagation, so the
-    // label sum (exact DECIMAL — never overflows at any corpus size) is
-    // strictly monotone until the fixpoint; sum unchanged ⟺ no label
-    // changed. The sum rides each round's materialization as an observed
-    // metric — still one Spark job per round, and the frame no longer
-    // carries an __old column or a change flag.
-    def labelSum = coalesce(sum(col("cluster_id")
-      .cast(org.apache.spark.sql.types.DecimalType(38, 0))), lit(0L)
-      .cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("lsum")
-    // init = the first HashMin round pre-applied (min of self and direct
-    // neighbors via the self-loops, one aggregation): near-dup components
-    // are cliques, so this alone is usually the fixpoint and the loop's
-    // first iteration just confirms the sum is unchanged
-    val obs0 = org.apache.spark.sql.Observation()
-    var labelsM = graft.Lineage.truncate(
-      edges.groupBy(col("dst").as("id")).agg(min(col("src")).as("cluster_id"))
-        .observe(obs0, labelSum, count(lit(1)).as("ln")))
-    var labels = labelsM.df
-    var prevSum = obs0.get("lsum")
-    // The label table's row count is CONSTANT across rounds (one row per
-    // node) — observed once on the init materialization. When it provably
-    // fits the session's broadcast threshold, hint each round's join:
-    // checkpoint scans lose partitioning info, so the unhinted join
-    // re-exchanges BOTH materialized sides every round (plus their AQE
-    // stage-jobs) just for AQE to usually pick broadcast anyway at
-    // runtime. Scale guard (r19 verdict item 7): a corpus-scale label
-    // table exceeds the budget and keeps the shuffle join.
-    val hintBroadcast = obs0.get("ln").asInstanceOf[Long] <=
-      graft.GraftSession.broadcastRowBudget(edges.sparkSession)
-    var changed = true
-    var converged = false
-    try {
-      var iter = 0
-      while (changed && iter < maxIters) {
-        val obs = org.apache.spark.sql.Observation()
-        val labelsB = if (hintBroadcast) broadcast(labels) else labels
-        val nextM = graft.Lineage.truncate(
-          edges.join(labelsB, col("src") === col("id"))
-            .groupBy(col("dst").as("id"))
-            .agg(min(col("cluster_id")).as("cluster_id"))
-            .observe(obs, labelSum))
-        val newSum = obs.get("lsum")
-        changed = newSum != prevSum
-        prevSum = newSum
-        labelsM.release() // the prior round feeds nothing anymore
-        labelsM = nextM
-        labels = nextM.df
-        iter += 1
-      }
-      // silent non-convergence would diverge from the exact closure — a
-      // >maxIters-diameter component must fail loudly, not return wrong labels
-      if (changed)
-        throw new IllegalStateException(
-          s"label propagation did not converge in $maxIters rounds; " +
-            "raise maxIters for very long duplicate chains")
-      converged = true
-    } finally {
-      edgesM.release()
-      if (!converged) labelsM.release() // error path: nothing will read it
-    }
-    labels.select(col("id").as("doc_id"), col("cluster_id"))
+    Graph.components(pairs, "doc_a", "doc_b", maxIters).df
+      .select(col("id").as("doc_id"), col("label").as("cluster_id"))
   }
 
   // ---------------------------------------------------------------- C22

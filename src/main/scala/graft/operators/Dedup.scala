@@ -745,9 +745,9 @@ object Dedup {
     * runs, built from this repo's own primitives: FastSS deletion-
     * neighborhood candidates on hashed variants (q120, zero false
     * negatives at distance 1, 8-byte join keys), exact codegen'd
-    * levenshtein verify, HashMin connected components (q59's loop
-    * discipline: edges materialized once, per-round truncate+release,
-    * loud non-convergence), and canonical-record election. With min-label
+    * levenshtein verify, HashMin connected components
+    * ([[Graph.components]], shared with q59), and canonical-record
+    * election. With min-label
     * propagation the component label IS the minimum member key, so the
     * canonical key needs no second argmax pass — it falls out of the CC
     * labels. Every customer appears exactly once (singletons are their
@@ -788,77 +788,26 @@ object Dedup {
       // -1 above the cap, so `!= -1` selects exactly the `<= 1` pairs
       .filter(levenshtein(col("na"), col("nb"), 1) =!= -1)
       .select(col("ka"), col("kb"))
-    // HashMin CC (q59's discipline, compacted: the match graph is sparse).
-    // Symmetrize via ONE explode (Graph.symmetrized): the unionAll form
-    // re-ran the candidate self-join + verify joins once per branch.
-    val edgesM0 = graft.Lineage.truncate(
-      Graph.symmetrized(pairs, "ka", "kb")
-        // lazy is safe HERE only because edgesM's truncate below is EAGER
-        // and runs before edgesM0.release()
-        .repartition(col("src")), eager = false)
-    // self-loops + monotone-sum convergence (q59's device): each round is
-    // ONE join + ONE aggregate — min over in-neighbors INCLUDING self —
-    // and the exact DECIMAL label sum rides the materialization as the
-    // convergence observation (labels only decrease; sum unchanged ⟺
-    // fixpoint), so the per-round left-join-and-least and the __old
-    // column are gone
-    val edgesM = graft.Lineage.truncate(
-      edgesM0.df.unionAll(edgesM0.df.select(col("dst")).distinct()
-        .select(col("dst").as("src"), col("dst"))))
-    edgesM0.release()
-    def labelSum = coalesce(sum(col("cl")
-      .cast(org.apache.spark.sql.types.DecimalType(38, 0))), lit(0L)
-      .cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("lsum")
+    // HashMin CC (the match graph is sparse)
+    val labelsM = Graph.components(pairs, "ka", "kb", maxIters)
     try {
-      val edges = edgesM.df
-      val obs0 = org.apache.spark.sql.Observation()
-      var labelsM = graft.Lineage.truncate(
-        edges.groupBy(col("dst").as("id")).agg(min(col("src")).as("cl"))
-          .observe(obs0, labelSum, count(lit(1)).as("ln")))
-      var prevSum = obs0.get("lsum")
-      // constant across rounds (one row per node) — q59's broadcast-hint
-      // guard: hint only when the OBSERVED label count fits the session
-      // broadcast budget; the unhinted per-round join re-exchanges both
-      // checkpoint sides (partitioning info is lost on the scan)
-      val hintBroadcast = obs0.get("ln").asInstanceOf[Long] <=
-        graft.GraftSession.broadcastRowBudget(edges.sparkSession)
-      var changed = true
-      var iter = 0
-      try {
-        while (changed && iter < maxIters) {
-          val obs = org.apache.spark.sql.Observation()
-          val labelsB = if (hintBroadcast) broadcast(labelsM.df) else labelsM.df
-          val nextM = graft.Lineage.truncate(
-            edges.join(labelsB, col("src") === col("id"))
-              .groupBy(col("dst").as("id")).agg(min(col("cl")).as("cl"))
-              .observe(obs, labelSum))
-          val newSum = obs.get("lsum")
-          changed = newSum != prevSum
-          prevSum = newSum
-          labelsM.release()
-          labelsM = nextM
-          iter += 1
-        }
-        if (changed) throw new IllegalStateException(
-          s"ER label propagation did not converge in $maxIters rounds")
-        val asg = c
-          .join(labelsM.df.select(col("id").as("c_custkey"), col("cl")),
-            Seq("c_custkey"), "left")
-          .select(col("c_custkey"), col("c_name"),
-            coalesce(col("cl"), col("c_custkey")).as("canonical_key"))
-        val sizes = asg.groupBy(col("canonical_key"))
-          .agg(count(lit(1)).as("cluster_size"))
-        val out = asg.join(sizes, Seq("canonical_key"))
-          .join(c.select(col("c_custkey").as("canonical_key"),
-            col("c_name").as("canonical_name")), Seq("canonical_key"))
-          .select(col("c_custkey"), col("c_name"), col("canonical_key"),
-            col("canonical_name"), col("cluster_size"))
-        // the CC labels must be consumed before release: materialize —
-        // eagerly, via truncate, so the returned frame registers in the
-        // leak registry (lazy to the caller; drained between queries)
-        graft.Lineage.truncate(out).df
-      } finally labelsM.release()
-    } finally edgesM.release()
+      val asg = c
+        .join(labelsM.df.select(col("id").as("c_custkey"), col("label").as("cl")),
+          Seq("c_custkey"), "left")
+        .select(col("c_custkey"), col("c_name"),
+          coalesce(col("cl"), col("c_custkey")).as("canonical_key"))
+      val sizes = asg.groupBy(col("canonical_key"))
+        .agg(count(lit(1)).as("cluster_size"))
+      val out = asg.join(sizes, Seq("canonical_key"))
+        .join(c.select(col("c_custkey").as("canonical_key"),
+          col("c_name").as("canonical_name")), Seq("canonical_key"))
+        .select(col("c_custkey"), col("c_name"), col("canonical_key"),
+          col("canonical_name"), col("cluster_size"))
+      // the CC labels must be consumed before release: materialize —
+      // eagerly, via truncate, so the returned frame registers in the
+      // leak registry (lazy to the caller; drained between queries)
+      graft.Lineage.truncate(out).df
+    } finally labelsM.release()
   }
 
   // ---------------------------------------------------------------- C69

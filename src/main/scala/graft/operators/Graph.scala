@@ -4,8 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
- * Degree-oriented wedge machinery for the near-dup-graph diagnostics
- * (q85 / q104 / q193).
+ * Graph kernels over pair lists: HashMin connected components (q59's
+ * duplicate clusters, q180's entity resolution) and degree-oriented wedge
+ * machinery for the near-dup-graph diagnostics (q85 / q104 / q193).
  *
  * The naive node-iterator keys the wedge self-join on the shared middle
  * vertex, so one boilerplate hub of degree d does d² pair work in a single
@@ -93,5 +94,101 @@ object Graph {
       .select(sort_array(array(col("a"), col("b"), col("c"))).as("t"))
       .select(col("t").getItem(0).as("va"), col("t").getItem(1).as("vb"),
         col("t").getItem(2).as("vc"))
+  }
+
+  /** Connected components of an undirected pair list by HashMin label
+    * propagation: every node that appears in `pairs` is labelled with the
+    * min id of its component. Returns the FINAL round's materialization,
+    * columns `(id, label)`; the caller reads `.df` and releases it when
+    * done (or leaves it to `Lineage.drainLeaked` between queries). Fails
+    * loudly when `maxIters` rounds do not reach the fixpoint: silent
+    * non-convergence would diverge from the exact closure.
+    *
+    * Scale shape: iterative hash joins on the edge list — O(E) shuffled
+    * per round, rounds = component diameter (near-dup and ER components
+    * are shallow; `maxIters` guards degenerate chains). Lineage is
+    * truncated every round ([[graft.Lineage]]), without which the plan
+    * doubles per iteration; under the durable posture each round spills
+    * durably, so a 1000-executor run losing one executor resumes from the
+    * last round instead of restarting the whole loop. Each round is
+    * released as soon as the next lands, and the edges once the loop
+    * ends. The only driver-side values are the convergence sum, the label
+    * count and the loop bound — aggregates, never data. */
+  def components(pairs: DataFrame, aCol: String, bCol: String,
+      maxIters: Int): graft.Lineage.Materialized = {
+    // symmetrize via ONE explode, not unionAll of two plan references: the
+    // union's branches each contain the full pair pipeline, and only its
+    // exchanges are deduplicated (ReuseExchange) — q59's salted join +
+    // intersect kernel executed TWICE per r19 profiling
+    val edgesM0 = graft.Lineage.truncate( // materialize once; reused below
+      symmetrized(pairs, aCol, bCol)
+        // lazy is safe HERE only because edgesM's truncate below is EAGER
+        // and runs before edgesM0.release()
+        .repartition(col("src")), eager = false)
+    // SELF-LOOPS make each HashMin round ONE join + ONE aggregate:
+    // min over in-neighbors INCLUDING self ≡ least(own, neighbor-min),
+    // so the per-round left-join-and-least (one more exchange + its AQE
+    // stage-jobs every round) disappears. Built from the materialized
+    // edge frame (two cheap checkpoint reads), then materialized itself —
+    // the loop must join a checkpoint, not re-run the union each round.
+    val edgesM = graft.Lineage.truncate(
+      edgesM0.df.unionAll(edgesM0.df.select(col("dst")).distinct()
+        .select(col("dst").as("src"), col("dst"))))
+    edgesM0.release()
+    // CONVERGENCE: labels only ever DECREASE under min-propagation, so the
+    // label sum (exact DECIMAL — never overflows at any corpus size) is
+    // strictly monotone until the fixpoint; sum unchanged ⟺ no label
+    // changed. The sum rides each round's materialization as an observed
+    // metric — still one Spark job per round, and the frame carries no
+    // __old column or change flag.
+    def labelSum = coalesce(sum(col("label")
+      .cast(org.apache.spark.sql.types.DecimalType(38, 0))), lit(0L)
+      .cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("lsum")
+    try {
+      val edges = edgesM.df
+      // init = the first HashMin round pre-applied (min of self and direct
+      // neighbors via the self-loops, one aggregation): near-dup components
+      // are cliques, so this alone is usually the fixpoint and the loop's
+      // first iteration just confirms the sum is unchanged
+      val obs0 = org.apache.spark.sql.Observation()
+      var labelsM = graft.Lineage.truncate(
+        edges.groupBy(col("dst").as("id")).agg(min(col("src")).as("label"))
+          .observe(obs0, labelSum, count(lit(1)).as("ln")))
+      var prevSum = obs0.get("lsum")
+      // The label table's row count is CONSTANT across rounds (one row per
+      // node) — observed once on the init materialization. When it provably
+      // fits the session's broadcast threshold, hint each round's join:
+      // checkpoint scans lose partitioning info, so the unhinted join
+      // re-exchanges BOTH materialized sides every round (plus their AQE
+      // stage-jobs) just for AQE to usually pick broadcast anyway at
+      // runtime. Scale guard (r19 verdict item 7): a corpus-scale label
+      // table exceeds the budget and keeps the shuffle join.
+      val hintBroadcast = obs0.get("ln").asInstanceOf[Long] <=
+        graft.GraftSession.broadcastRowBudget(edges.sparkSession)
+      try {
+        var changed = true
+        var iter = 0
+        while (changed && iter < maxIters) {
+          val obs = org.apache.spark.sql.Observation()
+          val labelsB = if (hintBroadcast) broadcast(labelsM.df) else labelsM.df
+          val nextM = graft.Lineage.truncate(
+            edges.join(labelsB, col("src") === col("id"))
+              .groupBy(col("dst").as("id"))
+              .agg(min(col("label")).as("label"))
+              .observe(obs, labelSum))
+          val newSum = obs.get("lsum")
+          changed = newSum != prevSum
+          prevSum = newSum
+          labelsM.release() // the prior round feeds nothing anymore
+          labelsM = nextM
+          iter += 1
+        }
+        if (changed)
+          throw new IllegalStateException(
+            s"label propagation did not converge in $maxIters rounds; " +
+              "raise maxIters for very long chains")
+        labelsM
+      } catch { case e: Throwable => labelsM.release(); throw e }
+    } finally edgesM.release()
   }
 }

@@ -36,18 +36,16 @@ object MultiMv {
 
   /** foreachBatch body maintaining all `views` under `basePath/<name>`.
     * Each view's merge basis (its prior snapshot) resolves INSIDE
-    * `publishAllComputed`, with every store's lease already held — a
-    * competing writer can't publish between the basis read and the commit
-    * and have its rows silently dropped (the lost-update the store's
-    * `publishComputed` doc refuses; same discipline as `upsertSink`). */
+    * [[SnapshotStore.publishAll]], with every store's lease already held —
+    * a competing writer can't publish between the basis read and the
+    * commit and have its rows silently dropped (the lost-update the
+    * store's publish core refuses; same discipline as `upsertSink`). */
   def fanOut(basePath: String, views: Seq[ViewDef], keep: Int = 3)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    SnapshotStore.publishAllComputed(
+      batch: DataFrame, batchId: Long): Unit =
+    SnapshotStore.publishAll(batch.sparkSession,
       views.map { v =>
         val store = s"$basePath/${v.name}"
-        (spark, store, () => SnapshotStore.mergeLatestByKey(
+        store -> (() => SnapshotStore.mergeLatestByKey(
           store, v.delta(batch), v.keys, v.versionCol, deleteCol = None))
       }, batchId, keep)
-  }
 }

@@ -152,31 +152,27 @@ object SnapshotStore {
     new WriterLease(fs, lock, token, leaseMs)
   }
 
-  /** Publish one epoch under an exclusive writer lease: stage, fence,
-    * atomic-rename, fence, pointer-flip. The lease covers the WHOLE
-    * publish; see the object doc for the takeover/fence guarantees. */
-  def publish(df: DataFrame, basePath: String, version: Long, keep: Int = 3,
-      lockLeaseMs: Long = DefaultLockLeaseMs): Unit =
-    publishComputed(df.sparkSession, basePath, version, keep, lockLeaseMs)(() => df)
-
-  /** [[publish]] variant whose frame is CONSTRUCTED under the lease. Any
-    * writer whose new epoch derives from the store's current state (e.g.
-    * [[upsertSink]]'s merge with the prior snapshot) must resolve that
-    * state inside `make` — resolving it before taking the lease races a
-    * competing writer's publish and silently drops its rows from the merge
-    * basis, the exact lost-update this store exists to refuse. */
-  def publishComputed(spark: SparkSession, basePath: String, version: Long,
+  /** Publish one epoch of one store: [[publishAll]] with one store. */
+  def publish(spark: SparkSession, basePath: String, version: Long,
       keep: Int = 3, lockLeaseMs: Long = DefaultLockLeaseMs)(
-      make: () => DataFrame): Unit = {
-    val lease = acquireLease(spark, basePath, lockLeaseMs)
-    try {
-      val df = make() // prior-state reads happen with the store ours
-      val staging = writeEpoch(df, basePath, version, lease.token)
-      staging.foreach(s => commitEpoch(spark, basePath, version, s, lease))
-      lease.checkHeld() // fence before the pointer flip
-      flipPointerLocked(spark, basePath, version, keep)
-    } finally lease.close()
-  }
+      make: () => DataFrame): Unit =
+    publishLeased(spark, Seq(basePath), keep, lockLeaseMs)(() => (version, Seq(make)))
+
+  /** Cross-store publish with 2PC shape — the local stand-in for TiFlink's
+    * coordinated transactions (coordinator/Transaction.java: prewrite all
+    * keys, then commit at one timestamp). Phase 1 PREPARES every store by
+    * staging its immutable epoch directory (no `_v=` dirs or pointers move —
+    * a failure here publishes nothing anywhere). Phase 2 COMMITS by renaming
+    * each staging into place and flipping each pointer under its lease. A
+    * crash mid-phase-2 can leave a prefix of stores flipped — the window a
+    * real coordinator closes with its commit record; readers of each store
+    * still only ever see complete epochs. Each `make` runs with every lease
+    * held; see [[publishLeased]]. */
+  def publishAll(spark: SparkSession, stores: Seq[(String, () => DataFrame)],
+      version: Long, keep: Int = 3,
+      lockLeaseMs: Long = DefaultLockLeaseMs): Unit =
+    publishLeased(spark, stores.map(_._1), keep, lockLeaseMs)(
+      () => (version, stores.map(_._2)))
 
   /** Publish the store's NEXT epoch with the version number resolved UNDER
     * the lease — the shape SQL `INSERT` needs: two concurrent inserts must
@@ -188,18 +184,48 @@ object SnapshotStore {
     * returned. */
   def publishNext(spark: SparkSession, basePath: String, keep: Int = 3,
       lockLeaseMs: Long = DefaultLockLeaseMs)(
-      make: Option[Long] => DataFrame): Long = {
-    val lease = acquireLease(spark, basePath, lockLeaseMs)
-    try {
+      make: Option[Long] => DataFrame): Long =
+    publishLeased(spark, Seq(basePath), keep, lockLeaseMs) { () =>
       val cur = latestVersion(spark, basePath)
-      val version = cur.getOrElse(0L) + 1L
-      val df = make(cur) // prior-state reads happen with the store ours
-      val staging = writeEpoch(df, basePath, version, lease.token)
-      staging.foreach(s => commitEpoch(spark, basePath, version, s, lease))
-      lease.checkHeld() // fence before the pointer flip
-      flipPointerLocked(spark, basePath, version, keep)
+      (cur.getOrElse(0L) + 1L, Seq(() => make(cur)))
+    }
+
+  /** The one publish sequence behind [[publish]], [[publishAll]] and
+    * [[publishNext]]: take every store's writer lease, then run `plan`,
+    * which names the epoch and one frame builder per store, then stage
+    * every store, rename every staging into place, and fence and flip
+    * every pointer. The leases cover the WHOLE publish; see the object
+    * doc for the takeover/fence guarantees. `plan` and the builders run
+    * with every store ours: any epoch derived from a store's current
+    * state (e.g. [[upsertSink]]'s merge with the prior snapshot) must
+    * resolve that state there — resolving it before the leases are held
+    * races a competing writer's publish and silently drops its rows from
+    * the merge basis, the exact lost-update this store exists to refuse.
+    * Returns the published epoch. */
+  private def publishLeased(spark: SparkSession, bases: Seq[String],
+      keep: Int, lockLeaseMs: Long)(
+      plan: () => (Long, Seq[() => DataFrame])): Long = {
+    // all leases first (conflicts throw rather than block → no deadlock),
+    // so no store's staging is written unless every store is ours to write
+    val leases = scala.collection.mutable.ArrayBuffer.empty[WriterLease]
+    try {
+      bases.foreach(base => leases += acquireLease(spark, base, lockLeaseMs))
+      val (version, makes) = plan()
+      // zipped from the lease buffer, so every store stages before any
+      // commits, whatever Seq the caller passed
+      val staged = leases.lazyZip(bases).lazyZip(makes).map {
+        (lease, base, make) =>
+          (base, writeEpoch(make(), base, version, lease.token), lease)
+      }
+      staged.foreach { case (base, staging, lease) =>
+        staging.foreach(s => commitEpoch(spark, base, version, s, lease))
+      }
+      staged.foreach { case (base, _, lease) =>
+        lease.checkHeld() // fence before the pointer flip
+        flipPointerLocked(spark, base, version, keep)
+      }
       version
-    } finally lease.close()
+    } finally leases.foreach(l => try l.close() catch { case NonFatal(_) => () })
   }
 
   /** Run `body` under the path's exclusive writer lease — the same
@@ -222,55 +248,10 @@ object SnapshotStore {
     } finally lease.close()
   }
 
-  /** Cross-store publish with 2PC shape — the local stand-in for TiFlink's
-    * coordinated transactions (coordinator/Transaction.java: prewrite all
-    * keys, then commit at one timestamp). Phase 1 PREPARES every store by
-    * staging its immutable epoch directory (no `_v=` dirs or pointers move —
-    * a failure here publishes nothing anywhere). Phase 2 COMMITS by renaming
-    * each staging into place and flipping each pointer under its lease. A
-    * crash mid-phase-2 can leave a prefix of stores flipped — the window a
-    * real coordinator closes with its commit record; readers of each store
-    * still only ever see complete epochs. */
-  def publishAll(
-      snapshots: Seq[(DataFrame, String)], version: Long, keep: Int = 3,
-      lockLeaseMs: Long = DefaultLockLeaseMs): Unit =
-    publishAllComputed(
-      snapshots.map { case (df, base) => (df.sparkSession, base, () => df) },
-      version, keep, lockLeaseMs)
-
-  /** [[publishAll]] variant whose frames are CONSTRUCTED under the leases —
-    * the multi-store twin of [[publishComputed]]: any epoch derived from a
-    * store's current state (e.g. a latest-by-key merge with the prior
-    * snapshot) must resolve that state inside `make`, AFTER every lease is
-    * held; resolving it earlier races a competing writer's publish and
-    * silently drops its rows from the merge basis. */
-  def publishAllComputed(
-      snapshots: Seq[(SparkSession, String, () => DataFrame)], version: Long,
-      keep: Int = 3, lockLeaseMs: Long = DefaultLockLeaseMs): Unit = {
-    // all leases first (conflicts throw rather than block → no deadlock),
-    // so no store's staging is written unless every store is ours to write
-    val leases = scala.collection.mutable.ArrayBuffer.empty[WriterLease]
-    try {
-      snapshots.foreach { case (spark, base, _) =>
-        leases += acquireLease(spark, base, lockLeaseMs)
-      }
-      val staged = snapshots.zip(leases).map { case ((spark, base, make), lease) =>
-        (spark, base, writeEpoch(make(), base, version, lease.token), lease)
-      }
-      staged.foreach { case (spark, base, staging, lease) =>
-        staging.foreach(s => commitEpoch(spark, base, version, s, lease))
-      }
-      staged.foreach { case (spark, base, _, lease) =>
-        lease.checkHeld()
-        flipPointerLocked(spark, base, version, keep)
-      }
-    } finally leases.foreach(l => try l.close() catch { case NonFatal(_) => () })
-  }
-
   /** Latest-by-key merge of a micro-batch into a store's CURRENT snapshot —
     * the one packed computation shared by [[upsertSink]] and
     * [[MultiMv.fanOut]] (call it only with the store's lease held, i.e.
-    * from inside a `publish*Computed` make). */
+    * from inside a [[publish]]/[[publishAll]] make). */
   private[streaming] def mergeLatestByKey(
       basePath: String, batch: DataFrame, keys: Seq[String],
       versionCol: String, deleteCol: Option[String]): DataFrame = {
@@ -417,17 +398,20 @@ object SnapshotStore {
     }
   }
 
-  /** Resolve the pointer. The flip is delete-then-rename (rename-onto-
-    * existing is not portable across Hadoop filesystems), so there is a
-    * sub-millisecond window where the pointer file is absent on a store
-    * that HAS committed epochs; a missing pointer is therefore retried
-    * briefly before concluding the store is empty. (Falling back to
-    * max(versions) instead would read a renamed-but-unflipped epoch —
-    * an uncommitted read — so absence after retries is the honest answer.
-    * The retry only arms when committed `_v=` epochs EXIST without a
-    * pointer (the mid-flip signature); a store with no epochs is provably
-    * empty, and sleeping on it would tax every first publish and every
-    * read of a fresh store ~50-150ms for nothing. */
+  /** Resolve the pointer: the max of the `_LATEST.v<n>` names. The flip is
+    * one atomic [[VersionedPointer]] create, and superseded names go only
+    * after it lands, so a versioned store never lacks its pointer. A
+    * LEGACY store (content-bearing `_LATEST`) was flipped
+    * delete-then-rename, which leaves a sub-millisecond window with no
+    * pointer file on a store that HAS committed epochs; for those a
+    * missing pointer is retried briefly before concluding the store is
+    * empty. (Falling back to max(versions) instead would read a
+    * renamed-but-unflipped epoch — an uncommitted read — so absence after
+    * retries is the honest answer.) The retry only arms when committed
+    * `_v=` epochs EXIST without a pointer (the mid-flip signature); a
+    * store with no epochs is provably empty, and sleeping on it would tax
+    * every first publish and every read of a fresh store ~50-150ms for
+    * nothing. */
   def latestVersion(spark: SparkSession, basePath: String): Option[Long] = {
     val fs = new Path(basePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     var attempt = 0
@@ -519,14 +503,14 @@ object SnapshotStore {
 
   /** foreachBatch sink: merge the micro-batch latest-by-key into the prior
     * snapshot and publish the result as a new epoch. The prior snapshot is
-    * resolved UNDER the writer lease ([[publishComputed]]) — a competing
-    * writer's epoch can never be silently dropped from the merge basis. */
+    * resolved UNDER the writer lease ([[publish]]) — a competing writer's
+    * epoch can never be silently dropped from the merge basis. */
   def upsertSink(
       basePath: String, keys: Seq[String], versionCol: String,
       deleteCol: Option[String] = None, keep: Int = 3,
       lockLeaseMs: Long = DefaultLockLeaseMs): (DataFrame, Long) => Unit =
     (batch, batchId) => {
-      publishComputed(batch.sparkSession, basePath, batchId, keep, lockLeaseMs) { () =>
+      publish(batch.sparkSession, basePath, batchId, keep, lockLeaseMs) { () =>
         mergeLatestByKey(basePath, batch, keys, versionCol, deleteCol)
       }
     }

@@ -116,14 +116,11 @@ object TimestampOracle {
       monotoneCacheKey = Some(s"tso-floor:$dir")).getOrElse(0L)
 
   /** Allocate the store's next global timestamp (pending until [[commit]]
-    * or [[abort]]). Strictly increasing and unique across jobs. */
-  def begin(spark: SparkSession, root: String): Ts =
-    begin(spark.sparkContext.hadoopConfiguration, root)
-
-  /** [[begin]] without a SparkSession — "across jobs" means across driver
-    * PROCESSES, and a second process contending for a timestamp needs
-    * only the filesystem, not a Spark runtime (the cross-process spec
-    * races two bare JVMs through this overload). */
+    * or [[abort]]). Strictly increasing and unique across jobs. Takes a
+    * bare Configuration, not a SparkSession — "across jobs" means across
+    * driver PROCESSES, and a second process contending for a timestamp
+    * needs only the filesystem, not a Spark runtime (the cross-process
+    * spec races two bare JVMs through it). */
   def begin(conf: org.apache.hadoop.conf.Configuration, root: String): Ts = {
     val fs = tsoDir(root).getFileSystem(conf)
     val dir = tsoDir(root)
@@ -153,12 +150,8 @@ object TimestampOracle {
     * at-or-below the safe point, and the only way an UNCOMMITTED ts got
     * below the floor is that its abort verdict was delivered and then
     * compacted — a marker's absence past the floor must not read as
-    * "never aborted". */
-  def commit(spark: SparkSession, root: String, ts: Ts): Unit =
-    commit(spark.sparkContext.hadoopConfiguration, root, ts)
-
-  /** [[commit]] from a bare Configuration — the overload [[TsoServer]]
-    * serves over TCP (no Spark runtime on the oracle host). */
+    * "never aborted". [[TsoServer]] serves it over TCP (no Spark runtime
+    * on the oracle host). */
   def commit(conf: org.apache.hadoop.conf.Configuration, root: String,
       ts: Ts): Unit = {
     val fs = fsOf(conf, root)
@@ -223,10 +216,6 @@ object TimestampOracle {
     * epoch is the documented late-never-torn case. No party acted on a
     * commit success in that interleaving (the committer's caller was
     * the one aborting). */
-  def abort(spark: SparkSession, root: String, ts: Ts): Unit =
-    abort(spark.sparkContext.hadoopConfiguration, root, ts)
-
-  /** [[abort]] from a bare Configuration (the [[TsoServer]] seam). */
   def abort(conf: org.apache.hadoop.conf.Configuration, root: String,
       ts: Ts): Unit = {
     val fs = fsOf(conf, root)
@@ -245,11 +234,6 @@ object TimestampOracle {
     * overtaken by a late-arriving lower epoch. Pending allocations older
     * than `leaseMs` are aborted in passing (marker written — the verdict
     * is durable, so a stalled holder's later commit fences loudly). */
-  def safePoint(spark: SparkSession, root: String,
-      leaseMs: Long = DefaultLeaseMs): Long =
-    safePoint(spark.sparkContext.hadoopConfiguration, root, leaseMs)
-
-  /** [[safePoint]] from a bare Configuration (the [[TsoServer]] seam). */
   def safePoint(conf: org.apache.hadoop.conf.Configuration, root: String,
       leaseMs: Long): Long = {
     val fs = fsOf(conf, root)
@@ -375,11 +359,6 @@ object TimestampOracle {
     * far inside the lease) must still find its durable verdict rather
     * than a spurious floor fence — see [[commit]]'s idempotent re-apply.
     * Listings stay bounded: O(in-flight + resolved-within-one-lease). */
-  def gc(spark: SparkSession, root: String,
-      leaseMs: Long = DefaultLeaseMs): Long =
-    gc(spark.sparkContext.hadoopConfiguration, root, leaseMs)
-
-  /** [[gc]] from a bare Configuration (the [[TsoServer]] seam). */
   def gc(conf: org.apache.hadoop.conf.Configuration, root: String,
       leaseMs: Long): Long = {
     val fs = fsOf(conf, root)
@@ -453,63 +432,28 @@ object TimestampOracle {
     sp
   }
 
-  /** Publish `table`'s next epoch under a GLOBAL timestamp: allocate,
-    * publish the snapshot at that epoch number (under the table's own
-    * writer lease — [[SnapshotStore.publishComputed]]), then commit the
-    * timestamp. Publish-before-commit is what makes [[safePoint]] a
-    * consistency fence; any failure aborts the timestamp so the safe
-    * point is never held back by a dead writer longer than the lease. */
-  def publishGlobal(spark: SparkSession, root: String, table: String,
-      keep: Int = 3)(make: () => DataFrame): Long =
-    publishGlobalVia(
-      FileTso(spark.sparkContext.hadoopConfiguration, root),
-      spark, root, table, keep)(make)
-
-  /** [[publishGlobal]] against ANY oracle transport — pass [[TcpTso]]
-    * and the timestamps come from a [[TsoServer]] over the network (the
-    * grpc-served coordinator shape): the DATA still lands in the shared
-    * snapshot store, but the ORDER authority needs only a socket. */
-  def publishGlobalVia(tso: TsoProvider, spark: SparkSession, root: String,
-      table: String, keep: Int = 3)(make: () => DataFrame): Long = {
-    val ts = tso.begin()
-    try {
-      SnapshotStore.publishComputed(
-        spark, new Path(root, table).toString, ts.ts, keep)(make)
-      tso.commit(ts)
-      ts.ts
-    } catch {
-      case e: Throwable =>
-        try tso.abort(ts)
-        catch { case scala.util.control.NonFatal(_) => () }
-        throw e
-    }
-  }
-
-  /** Multi-table atomic fan-out under a GLOBAL timestamp — the complete
+  /** Publish `tables` under ONE global timestamp from `tso` — the
     * coordinator analog (the reference's 2PC commits every table of a
     * transaction at ONE oracle-issued timestamp, Transaction.java via
-    * GrpcService.java): allocate, 2-phase-publish every view at that
-    * epoch ([[SnapshotStore.publishAllComputed]] — all leases first,
-    * all stages, then all pointer flips), then commit the timestamp.
-    * Readers pinned at the safe point therefore see the fan-out
-    * ALL-OR-NOTHING: its epochs become safe only once the shared
-    * timestamp resolves. Any failure aborts the timestamp. */
-  def publishAllGlobal(spark: SparkSession, root: String,
-      tables: Seq[(String, () => DataFrame)], keep: Int = 3): Long =
-    publishAllGlobalVia(
-      FileTso(spark.sparkContext.hadoopConfiguration, root),
-      spark, root, tables, keep)
-
-  /** [[publishAllGlobal]] against ANY oracle transport ([[TcpTso]] /
-    * [[FileTso]]) — the 2PC fan-out stamped by a network coordinator. */
-  def publishAllGlobalVia(tso: TsoProvider, spark: SparkSession,
-      root: String, tables: Seq[(String, () => DataFrame)],
-      keep: Int = 3): Long = {
+    * GrpcService.java): allocate, 2-phase-publish every table at that
+    * epoch ([[SnapshotStore.publishAll]] — all leases first, all stages,
+    * then all pointer flips), then commit the timestamp. A single table
+    * is a one-element `tables`. Publish-before-commit is what makes
+    * [[safePoint]] a consistency fence: readers pinned at the safe point
+    * see a fan-out ALL-OR-NOTHING, because its epochs become safe only
+    * once the shared timestamp resolves. Any failure aborts the
+    * timestamp, so the safe point is never held back by a dead writer
+    * longer than the lease. `tso` is [[FileTso]] for the store's own
+    * `_tso` directory, or [[TcpTso]] for a [[TsoServer]] over the network
+    * (the grpc-served coordinator shape): the DATA still lands in the
+    * shared snapshot store, but the ORDER authority needs only a socket.
+    * Returns the timestamp, which is every table's new epoch. */
+  def publish(tso: TsoProvider, spark: SparkSession, root: String,
+      tables: Seq[(String, () => DataFrame)], keep: Int = 3): Long = {
     val ts = tso.begin()
     try {
-      SnapshotStore.publishAllComputed(
-        tables.map { case (t, make) =>
-          (spark, new Path(root, t).toString, make) },
+      SnapshotStore.publishAll(spark,
+        tables.map { case (t, make) => new Path(root, t).toString -> make },
         ts.ts, keep)
       tso.commit(ts)
       ts.ts

@@ -37,7 +37,7 @@ import org.apache.hadoop.conf.Configuration
  *                        the server requires a token the line lacks)
  *
  * [[TsoProvider]] abstracts the two transports so the publish/commit
- * choreography ([[TimestampOracle.publishGlobalVia]]) is written once and
+ * choreography ([[TimestampOracle.publish]]) is written once and
  * runs against either — the spec drives the SAME skew-free pinned-read
  * scenarios through TCP that the file provider passes.
  */

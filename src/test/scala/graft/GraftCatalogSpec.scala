@@ -23,12 +23,10 @@ class GraftCatalogSpec extends SparkSpec {
 
   /** Fresh store per test (epochs are monotone per store). */
   private def publishMv(ns: String): Unit = {
-    SnapshotStore.publish(
-      Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("id", "grp", "v"),
-      s"$root/$ns/mv", version = 1L)
-    SnapshotStore.publish(
-      Seq((1L, "a", 11.0), (2L, "b", 20.0), (3L, "c", 30.0)).toDF("id", "grp", "v"),
-      s"$root/$ns/mv", version = 2L)
+    SnapshotStore.publish(spark, s"$root/$ns/mv", version = 1L)(() =>
+      Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("id", "grp", "v"))
+    SnapshotStore.publish(spark, s"$root/$ns/mv", version = 2L)(() =>
+      Seq((1L, "a", 11.0), (2L, "b", 20.0), (3L, "c", 30.0)).toDF("id", "grp", "v"))
   }
 
   test("SELECT from graft.<ns>.<table> reads the committed epoch") {
@@ -37,8 +35,8 @@ class GraftCatalogSpec extends SparkSpec {
       .as[(Long, Double)].collect().toSeq
     assert(got === Seq((1L, 11.0), (2L, 20.0), (3L, 30.0)))
     // epoch resolution is per-scan: a new publish is visible to the NEXT query
-    SnapshotStore.publish(
-      Seq((1L, "a", 12.0)).toDF("id", "grp", "v"), s"$root/s1/mv", 3L)
+    SnapshotStore.publish(spark, s"$root/s1/mv", 3L)(() =>
+      Seq((1L, "a", 12.0)).toDF("id", "grp", "v"))
     assert(spark.sql("SELECT count(*) AS c FROM graft.s1.mv")
       .as[Long].head() === 1L)
   }
@@ -67,7 +65,8 @@ class GraftCatalogSpec extends SparkSpec {
 
   test("catalog lists namespaces and tables from the live directory tree") {
     publishMv("s4")
-    SnapshotStore.publish(Seq((1L, 1L)).toDF("k", "ver"), s"$root/s4/other", 1L)
+    SnapshotStore.publish(spark, s"$root/s4/other", 1L)(() =>
+      Seq((1L, 1L)).toDF("k", "ver"))
     val tables = spark.sql("SHOW TABLES IN graft.s4").select("tableName")
       .as[String].collect().toSet
     assert(tables === Set("mv", "other"))
@@ -79,9 +78,8 @@ class GraftCatalogSpec extends SparkSpec {
   test("schema evolution: analysis-time pins keep the old schema, scan-option pins refuse") {
     publishMv("s6")
     // epoch 3 ADDS a column
-    SnapshotStore.publish(
-      Seq((1L, "a", 12.0, true)).toDF("id", "grp", "v", "flag"),
-      s"$root/s6/mv", 3L)
+    SnapshotStore.publish(spark, s"$root/s6/mv", 3L)(() =>
+      Seq((1L, "a", 12.0, true)).toDF("id", "grp", "v", "flag"))
     // VERSION AS OF pins at load → the query is ANALYZED with the old schema
     val asOf = spark.sql("SELECT * FROM graft.s6.mv VERSION AS OF 1")
     assert(asOf.schema.fieldNames.toSeq === Seq("id", "grp", "v"))

@@ -13,12 +13,10 @@ class GraftOptionsSpec extends SparkSpec {
     val o = GraftOptions.fromMap(Map(
       GraftOptions.TriggerMs -> "500",
       GraftOptions.Buckets -> "8",
-      GraftOptions.LockLeaseMs -> "60000",
       GraftOptions.WatermarkColumn -> "ts",
       GraftOptions.WatermarkDelay -> "10 minutes",
-      GraftOptions.SnapshotKeep -> "5",
       GraftOptions.DropIfExists -> "true"))
-    assert(o === GraftOptions(500L, 8, 60000L, Some(("ts", "10 minutes")), 5, true))
+    assert(o === GraftOptions(500L, 8, Some(("ts", "10 minutes")), true))
   }
 
   test("every malformed option names its key and fails loudly") {
@@ -28,8 +26,6 @@ class GraftOptionsSpec extends SparkSpec {
     assert(bad(GraftOptions.Buckets -> "eight").contains(GraftOptions.Buckets))
     assert(bad(GraftOptions.Buckets -> "0").contains(">= 1"))
     assert(bad(GraftOptions.TriggerMs -> "-5").contains(">= 0"))
-    // below the lease heartbeat floor SnapshotStore itself enforces
-    assert(bad(GraftOptions.LockLeaseMs -> "10").contains(">= 1000"))
     assert(bad(GraftOptions.DropIfExists -> "yes").contains("not a boolean"))
     assert(bad(GraftOptions.WatermarkColumn -> "ts")
       .contains("must be set together"))
@@ -37,6 +33,17 @@ class GraftOptionsSpec extends SparkSpec {
       GraftOptions.WatermarkDelay -> "sideways").contains("cannot parse"))
     assert(bad(GraftOptions.WatermarkColumn -> "ts",
       GraftOptions.WatermarkDelay -> "-3 minutes").contains("non-negative"))
+  }
+
+  test("the lease and retention keys are gone: setting either fails as unknown") {
+    // no code reads a lease or retention option: setting one must fail
+    // loudly, not run silently on the defaults
+    for (key <- Seq("graft.lock.lease.ms", "graft.snapshot.keep")) {
+      val e = intercept[IllegalArgumentException](
+        GraftOptions.fromMap(Map(key -> "10")))
+      assert(e.getMessage.contains("unknown graft option") &&
+        e.getMessage.contains(key), e.getMessage)
+    }
   }
 
   test("options drive the MV builder: trigger, buckets, watermark applied") {

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions.col
 
-import graft.streaming.{BucketedTable, SnapshotStore, TimestampOracle, UpsertSink}
+import graft.streaming.{BucketedTable, FileTso, SnapshotStore, TimestampOracle, UpsertSink}
 
 /**
  * Crash-point ENUMERATION over the file protocols — the systematic form of
@@ -40,8 +40,8 @@ class Round17CrashSweepSpec extends SparkSpec with CrashSweepHarness {
 
     val tpl = Files.createTempDirectory("tpl-snap-").toFile
     InstrumentedFs.reset()
-    SnapshotStore.publish(contentA.toDF("k", "v").coalesce(1),
-      s"ifs://$tpl/store", 1L)
+    SnapshotStore.publish(spark, s"ifs://$tpl/store", 1L)(() =>
+      contentA.toDF("k", "v").coalesce(1))
 
     def read(root: String, v: Long): Set[(Int, String)] =
       SnapshotStore.readSnapshot(spark, s"$root/store", Some(v))
@@ -49,7 +49,7 @@ class Round17CrashSweepSpec extends SparkSpec with CrashSweepHarness {
 
     val swept = sweep("snapshot", tpl,
       attempt = (root, _) =>
-        SnapshotStore.publishComputed(spark, s"$root/store", 2L)(() => dfB),
+        SnapshotStore.publish(spark, s"$root/store", 2L)(() => dfB),
       recover = (root, local) => {
         // MID-CRASH invariant first: the store is readable at a committed
         // epoch whose content is exactly A or exactly B — never torn
@@ -63,7 +63,7 @@ class Round17CrashSweepSpec extends SparkSpec with CrashSweepHarness {
         val old = System.currentTimeMillis() - SnapshotStore.DefaultLockLeaseMs - 60000
         names(store).filter(_.startsWith("_LATEST.lock"))
           .foreach(f => new java.io.File(store, f).setLastModified(old))
-        SnapshotStore.publishComputed(spark, s"$root/store", 2L)(() => dfB)
+        SnapshotStore.publish(spark, s"$root/store", 2L)(() => dfB)
       },
       invariant = (root, local) => {
         assert(SnapshotStore.latestVersion(spark, s"$root/store") === Some(2L))
@@ -77,6 +77,59 @@ class Round17CrashSweepSpec extends SparkSpec with CrashSweepHarness {
       })
     info(s"snapshot publish: $swept crash points swept green")
     assert(swept >= 10, s"suspiciously few crash points ($swept) — matcher broken?")
+  }
+
+  // ---------------------------------------------------------------- A2
+  test("SQL INSERT into a snapshot store survives a crash at every mutation point") {
+    // `INSERT INTO <catalog>.<ns>.<table>` runs SnapshotStore.publishNext:
+    // the epoch number and the union basis resolve under the lease. One
+    // catalog rooted at the temp directory serves every iteration, each
+    // copy being its own namespace.
+    val old = (1 to 4).map(i => (i, "old"))
+    val both = (old ++ Seq((5, "new"), (6, "new"))).toSet
+    val tpl = Files.createTempDirectory("tpl-ins-").toFile
+    InstrumentedFs.reset()
+    SnapshotStore.publish(spark, s"ifs://$tpl/t", 1L)(() =>
+      old.toDF("k", "v").coalesce(1))
+    spark.conf.set("spark.sql.catalog.sweepsql", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.sweepsql.path", s"ifs://${tpl.getParent}")
+
+    def insert(local: java.io.File): Unit =
+      spark.sql(s"INSERT INTO sweepsql.`${local.getName}`.t " +
+        "VALUES (5, 'new'), (6, 'new')")
+    def read(root: String, v: Long): Set[(Int, String)] =
+      SnapshotStore.readSnapshot(spark, s"$root/t", Some(v))
+        .as[(Int, String)].collect().toSet
+
+    val swept = sweep("insert", tpl,
+      attempt = (_, local) => insert(local),
+      recover = (root, local) => {
+        // MID-CRASH: a committed epoch holding exactly the old rows or
+        // exactly old ∪ inserted — never torn, never pointerless
+        val lv = SnapshotStore.latestVersion(spark, s"$root/t")
+        assert(lv === Some(1L) || lv === Some(2L), s"pointer lost: $lv")
+        assert(read(root, lv.get) === (if (lv.get == 1L) old.toSet else both))
+        val store = new java.io.File(local, "t")
+        val expired = System.currentTimeMillis() - SnapshotStore.DefaultLockLeaseMs - 60000
+        names(store).filter(_.startsWith("_LATEST.lock"))
+          .foreach(f => new java.io.File(store, f).setLastModified(expired))
+        // an INSERT is not idempotent: re-run it only if its epoch never
+        // committed; otherwise the next writer just breaks the dead lock
+        if (lv.contains(1L)) insert(local)
+        else SnapshotStore.withWriterLock(spark, s"$root/t")(())
+      },
+      invariant = (root, local) => {
+        assert(SnapshotStore.latestVersion(spark, s"$root/t") === Some(2L))
+        assert(read(root, 2L) === both)
+        assert(read(root, 1L) === old.toSet) // retained epoch intact
+        val leftover = names(new java.io.File(local, "t"))
+        assert(!leftover.exists(_.startsWith("_staging_v=")),
+          s"staging debris after recovery: $leftover")
+        assert(!leftover.contains("_LATEST.lock"),
+          "writer lock leaked past a completed recovery")
+      })
+    info(s"SQL INSERT: $swept crash points swept green")
+    assert(swept >= 20, s"suspiciously few crash points ($swept)")
   }
 
   // ---------------------------------------------------------------- B
@@ -160,7 +213,7 @@ class Round17CrashSweepSpec extends SparkSpec with CrashSweepHarness {
 
   // ---------------------------------------------------------------- E
   test("2PC fan-out publish survives a crash at every mutation point") {
-    // publishAllComputed: all leases, all stages, then all pointer flips.
+    // publishAll: all leases, all stages, then all pointer flips.
     // A crash mid-phase-2 can leave a PREFIX of stores flipped (the
     // documented window a real coordinator closes with a commit record);
     // the invariant is per-store epoch integrity mid-crash and full
@@ -168,9 +221,9 @@ class Round17CrashSweepSpec extends SparkSpec with CrashSweepHarness {
     def dfFor(t: String, e: Int) =
       (1 to 4).map(i => (i, s"$t-e$e")).toDF("k", "v").coalesce(1)
     def publishBoth(root: String, version: Long): Unit =
-      SnapshotStore.publishAllComputed(Seq(
-        (spark, s"$root/x", () => dfFor("x", version.toInt)),
-        (spark, s"$root/y", () => dfFor("y", version.toInt))), version)
+      SnapshotStore.publishAll(spark, Seq(
+        s"$root/x" -> (() => dfFor("x", version.toInt)),
+        s"$root/y" -> (() => dfFor("y", version.toInt))), version)
     def read(root: String, t: String): Set[(Int, String)] =
       SnapshotStore.readSnapshot(spark, s"$root/$t")
         .as[(Int, String)].collect().toSet
@@ -209,24 +262,24 @@ class Round17CrashSweepSpec extends SparkSpec with CrashSweepHarness {
   }
 
   // ---------------------------------------------------------------- F
-  test("oracle-stamped publish (publishGlobal) survives a crash at every mutation point") {
+  test("oracle-stamped publish survives a crash at every mutation point") {
     // the composed choreography: begin -> publish epoch ts -> commit ts.
     // Publish-before-commit is the consistency fence; recovery is a NEW
     // allocation (the orphan lease-expires), and the safe point must end
     // gap-free with the store pinned readable at it.
-    // content is epoch-independent: publishGlobal numbers epochs by the
-    // ORACLE timestamp, which a recovery attempt re-allocates fresh
+    // content is epoch-independent: the stamped publish numbers epochs by
+    // the ORACLE timestamp, which a recovery attempt re-allocates fresh
     val content = (1 to 4).map(i => (i, "payload")).toSet
     val conf = spark.sparkContext.hadoopConfiguration
     def publish(root: String): Long =
-      TimestampOracle.publishGlobal(spark, root, "t")(() =>
-        content.toSeq.toDF("k", "v").coalesce(1))
+      TimestampOracle.publish(FileTso(conf, root), spark, root,
+        Seq("t" -> (() => content.toSeq.toDF("k", "v").coalesce(1))))
 
     val tpl = Files.createTempDirectory("tpl-glob-").toFile
     InstrumentedFs.reset()
     assert(publish(s"ifs://$tpl") === 1L)
 
-    val swept = sweep("publishGlobal", tpl,
+    val swept = sweep("stamped", tpl,
       attempt = (root, _) => { publish(root); () },
       recover = (root, local) => {
         val old = System.currentTimeMillis() - SnapshotStore.DefaultLockLeaseMs - 60000
@@ -254,7 +307,7 @@ class Round17CrashSweepSpec extends SparkSpec with CrashSweepHarness {
         val as = markers.filter(_.startsWith("a=")).map(_.drop(2).toLong).toSet
         assert((cs intersect as).isEmpty, s"dual verdicts: ${cs intersect as}")
       })
-    info(s"publishGlobal: $swept crash points swept green")
+    info(s"oracle-stamped publish: $swept crash points swept green")
     assert(swept >= 15, s"suspiciously few crash points ($swept)")
   }
 

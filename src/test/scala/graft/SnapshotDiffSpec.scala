@@ -19,7 +19,8 @@ class SnapshotDiffSpec extends SparkSpec {
     Files.createTempDirectory("snapdiff").toString + "/t"
 
   private def pub(base: String, v: Long, rows: Seq[(Long, String, Double)]): Unit =
-    SnapshotStore.publish(rows.toDF("id", "name", "score"), base, v, keep = 10)
+    SnapshotStore.publish(spark, base, v, keep = 10)(() =>
+      rows.toDF("id", "name", "score"))
 
   private val v1Rows = Seq((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0))
   // v2: update 2, delete 3, insert 4; 1 untouched
@@ -61,11 +62,10 @@ class SnapshotDiffSpec extends SparkSpec {
 
   test("all-null payload vs absent row stay distinguishable") {
     val base = store()
-    SnapshotStore.publish(
-      Seq((1L, Some("x")), (2L, Some("y"))).toDF("id", "name"), base, 1L, keep = 10)
-    SnapshotStore.publish(
-      Seq((1L, None: Option[String]), (2L, Some("y"))).toDF("id", "name"),
-      base, 2L, keep = 10)
+    SnapshotStore.publish(spark, base, 1L, keep = 10)(() =>
+      Seq((1L, Some("x")), (2L, Some("y"))).toDF("id", "name"))
+    SnapshotStore.publish(spark, base, 2L, keep = 10)(() =>
+      Seq((1L, None: Option[String]), (2L, Some("y"))).toDF("id", "name"))
     val rows = SnapshotStore.changesBetween(spark, base, 1L, 2L, Seq("id"))
       .as[(Long, String, Option[String])].collect().toSet
     // key 1's payload went all-null: that is an UPDATE, not a delete
@@ -80,9 +80,8 @@ class SnapshotDiffSpec extends SparkSpec {
       SnapshotStore.changesBetween(spark, base, 1L, 99L, Seq("id")))
     assert(e1.getMessage.contains("99"))
     // an epoch with a different column set refuses rather than null-fills
-    SnapshotStore.publish(
-      Seq((1L, "a", 1.0, true)).toDF("id", "name", "score", "flag"),
-      base, 3L, keep = 10)
+    SnapshotStore.publish(spark, base, 3L, keep = 10)(() =>
+      Seq((1L, "a", 1.0, true)).toDF("id", "name", "score", "flag"))
     val e2 = intercept[IllegalArgumentException](
       SnapshotStore.changesBetween(spark, base, 1L, 3L, Seq("id")))
     assert(e2.getMessage.contains("schemas"))

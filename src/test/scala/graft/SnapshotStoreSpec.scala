@@ -48,7 +48,7 @@ class SnapshotStoreSpec extends SparkSpec {
   test("retention prunes old epochs but keeps the window") {
     val base = Files.createTempDirectory("snapr").toString + "/t"
     (0L to 5L).foreach { v =>
-      SnapshotStore.publish(Seq((v, "x")).toDF("id", "s"), base, v, keep = 2)
+      SnapshotStore.publish(spark, base, v, keep = 2)(() => Seq((v, "x")).toDF("id", "s"))
     }
     assert(SnapshotStore.versions(spark, base).sorted === Seq(4L, 5L))
     assert(SnapshotStore.latestVersion(spark, base) === Some(5L))
@@ -75,7 +75,7 @@ class SnapshotStoreSpec extends SparkSpec {
     // pre-versioning store's delete-then-rename window can produce it)
     val fs = new org.apache.hadoop.fs.Path(base)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    SnapshotStore.publish(Seq((1L, "a")).toDF("id", "s"), base, 1L)
+    SnapshotStore.publish(spark, base, 1L)(() => Seq((1L, "a")).toDF("id", "s"))
     fs.delete(new org.apache.hadoop.fs.Path(base, "_LATEST.v1"), false)
     val t1 = System.nanoTime()
     assert(SnapshotStore.latestVersion(spark, base).isEmpty)
@@ -89,7 +89,7 @@ class SnapshotStoreSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def p(n: String) = new org.apache.hadoop.fs.Path(base, n)
     // the flip IS one atomic create of a name-versioned pointer
-    SnapshotStore.publish(Seq((1L, "a")).toDF("id", "s"), base, 1L)
+    SnapshotStore.publish(spark, base, 1L)(() => Seq((1L, "a")).toDF("id", "s"))
     assert(fs.exists(p("_LATEST.v1")))
     // a legacy content-bearing pointer (pre-versioning store) still reads
     fs.delete(p("_LATEST.v1"), false)
@@ -97,7 +97,7 @@ class SnapshotStoreSpec extends SparkSpec {
     try out.writeBytes("1") finally out.close()
     assert(SnapshotStore.latestVersion(spark, base) === Some(1L))
     // the next publish migrates: new versioned pointer lands, legacy goes
-    SnapshotStore.publish(Seq((2L, "b")).toDF("id", "s"), base, 2L)
+    SnapshotStore.publish(spark, base, 2L)(() => Seq((2L, "b")).toDF("id", "s"))
     assert(fs.exists(p("_LATEST.v2")) && !fs.exists(p("_LATEST")))
     assert(SnapshotStore.latestVersion(spark, base) === Some(2L))
     // crash leftovers (a superseded pointer that escaped cleanup) can
@@ -110,14 +110,14 @@ class SnapshotStoreSpec extends SparkSpec {
 
   test("a held lock makes a second writer fail loudly, store untouched") {
     val base = Files.createTempDirectory("snapl").toString + "/t"
-    SnapshotStore.publish(Seq((1L, "a")).toDF("id", "s"), base, 1L)
+    SnapshotStore.publish(spark, base, 1L)(() => Seq((1L, "a")).toDF("id", "s"))
     // simulate writer A mid-flip: its lock exists
     val lock = new org.apache.hadoop.fs.Path(base, "_LATEST.lock")
     val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val held = fs.create(lock, false)
     try {
       intercept[SnapshotStore.ConcurrentPublishException] {
-        SnapshotStore.publish(Seq((2L, "b")).toDF("id", "s"), base, 2L)
+        SnapshotStore.publish(spark, base, 2L)(() => Seq((2L, "b")).toDF("id", "s"))
       }
     } finally { held.close(); fs.delete(lock, false) }
     // loser changed nothing the pointer can see
@@ -128,7 +128,7 @@ class SnapshotStoreSpec extends SparkSpec {
 
   test("a crashed writer's expired lock is taken over; a live lock is not") {
     val base = Files.createTempDirectory("snaptl").toString + "/t"
-    SnapshotStore.publish(Seq((1L, "a")).toDF("id", "s"), base, 1L)
+    SnapshotStore.publish(spark, base, 1L)(() => Seq((1L, "a")).toDF("id", "s"))
     val lock = new org.apache.hadoop.fs.Path(base, "_LATEST.lock")
     val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // Writer A crashed between lock-create and its finally-delete: the lock
@@ -137,13 +137,13 @@ class SnapshotStoreSpec extends SparkSpec {
     fs.setTimes(lock, System.currentTimeMillis() - 60_000L, -1L)
     // Live-writer conflict first: within the lease the lock still wins.
     intercept[SnapshotStore.ConcurrentPublishException] {
-      SnapshotStore.publish(Seq((2L, "b")).toDF("id", "s"), base, 2L,
-        lockLeaseMs = 600_000L)
+      SnapshotStore.publish(spark, base, 2L,
+        lockLeaseMs = 600_000L)(() => Seq((2L, "b")).toDF("id", "s"))
     }
     assert(SnapshotStore.latestVersion(spark, base) === Some(1L))
     // Past the lease, writer B breaks the corpse and publishes.
-    SnapshotStore.publish(Seq((2L, "b")).toDF("id", "s"), base, 2L,
-      lockLeaseMs = 30_000L)
+    SnapshotStore.publish(spark, base, 2L,
+      lockLeaseMs = 30_000L)(() => Seq((2L, "b")).toDF("id", "s"))
     assert(SnapshotStore.latestVersion(spark, base) === Some(2L))
     // B released its own lock on the way out — the store is unlocked.
     assert(!fs.exists(lock))
@@ -151,10 +151,10 @@ class SnapshotStoreSpec extends SparkSpec {
 
   test("a delayed stale writer cannot regress or clobber; replay is a no-op") {
     val base = Files.createTempDirectory("snaps").toString + "/t"
-    SnapshotStore.publish(Seq((1L, "v3")).toDF("id", "s"), base, 3L)
-    SnapshotStore.publish(Seq((1L, "v5")).toDF("id", "s"), base, 5L)
+    SnapshotStore.publish(spark, base, 3L)(() => Seq((1L, "v3")).toDF("id", "s"))
+    SnapshotStore.publish(spark, base, 5L)(() => Seq((1L, "v5")).toDF("id", "s"))
     intercept[SnapshotStore.ConcurrentPublishException] {
-      SnapshotStore.publish(Seq((1L, "v3x")).toDF("id", "s"), base, 3L)
+      SnapshotStore.publish(spark, base, 3L)(() => Seq((1L, "v3x")).toDF("id", "s"))
     }
     assert(SnapshotStore.latestVersion(spark, base) === Some(5L))
     // the retained time-travel epoch was not clobbered by the stale writer
@@ -162,7 +162,7 @@ class SnapshotStoreSpec extends SparkSpec {
       .select("s").as[String].head() === "v3")
     // crash-replay of the SAME committed epoch: committed epochs are
     // immutable — pinned readers keep their files; the replay is a no-op
-    SnapshotStore.publish(Seq((1L, "v5r")).toDF("id", "s"), base, 5L)
+    SnapshotStore.publish(spark, base, 5L)(() => Seq((1L, "v5r")).toDF("id", "s"))
     assert(SnapshotStore.readSnapshot(spark, base)
       .select("s").as[String].head() === "v5")
   }
@@ -170,9 +170,9 @@ class SnapshotStoreSpec extends SparkSpec {
   test("publishAll prepares every store before any pointer flips (2PC shape)") {
     val baseA = Files.createTempDirectory("snap2pcA").toString + "/t"
     val baseB = Files.createTempDirectory("snap2pcB").toString + "/t"
-    SnapshotStore.publishAll(Seq(
-      (Seq((1L, "a1")).toDF("id", "s"), baseA),
-      (Seq((1L, "b1")).toDF("id", "s"), baseB)), 1L)
+    SnapshotStore.publishAll(spark, Seq(
+      baseA -> (() => Seq((1L, "a1")).toDF("id", "s")),
+      baseB -> (() => Seq((1L, "b1")).toDF("id", "s"))), 1L)
     assert(SnapshotStore.latestVersion(spark, baseA) === Some(1L))
     assert(SnapshotStore.latestVersion(spark, baseB) === Some(1L))
 
@@ -182,18 +182,18 @@ class SnapshotStoreSpec extends SparkSpec {
       throw new RuntimeException("boom"); i: Long
     })
     intercept[Exception] {
-      SnapshotStore.publishAll(Seq(
-        (Seq((2L, "a2")).toDF("id", "s"), baseA),
-        (spark.range(1).select(boom($"id").as("id")), baseB)), 2L)
+      SnapshotStore.publishAll(spark, Seq(
+        baseA -> (() => Seq((2L, "a2")).toDF("id", "s")),
+        baseB -> (() => spark.range(1).select(boom($"id").as("id")))), 2L)
     }
     assert(SnapshotStore.latestVersion(spark, baseA) === Some(1L),
       "no store may commit an epoch any sibling failed to prepare")
     assert(SnapshotStore.latestVersion(spark, baseB) === Some(1L))
 
     // clean retry of the same epoch succeeds everywhere
-    SnapshotStore.publishAll(Seq(
-      (Seq((2L, "a2")).toDF("id", "s"), baseA),
-      (Seq((2L, "b2")).toDF("id", "s"), baseB)), 2L)
+    SnapshotStore.publishAll(spark, Seq(
+      baseA -> (() => Seq((2L, "a2")).toDF("id", "s")),
+      baseB -> (() => Seq((2L, "b2")).toDF("id", "s"))), 2L)
     assert(SnapshotStore.readSnapshot(spark, baseA)
       .select("s").as[String].head() === "a2")
     assert(SnapshotStore.readSnapshot(spark, baseB)
@@ -202,7 +202,7 @@ class SnapshotStoreSpec extends SparkSpec {
 
   test("lease fence: a lock stolen during phase 1 aborts before the flip") {
     val base = Files.createTempDirectory("snapf").toString + "/t"
-    SnapshotStore.publish(Seq((1L, "a")).toDF("id", "s"), base, 1L)
+    SnapshotStore.publish(spark, base, 1L)(() => Seq((1L, "a")).toDF("id", "s"))
     val lockFile = base + "/_LATEST.lock"
     // Phase-1 frame whose evaluation replaces the lock with a thief's —
     // simulating a takeover while this writer's whole process was stalled.
@@ -213,7 +213,8 @@ class SnapshotStoreSpec extends SparkSpec {
       i
     }
     intercept[SnapshotStore.ConcurrentPublishException] {
-      SnapshotStore.publish(spark.range(2).select(steal($"id").as("id")), base, 2L)
+      SnapshotStore.publish(spark, base, 2L)(() =>
+        spark.range(2).select(steal($"id").as("id")))
     }
     // the fence fired BEFORE either commit point: pointer untouched AND the
     // staged epoch was never renamed into a readable _v= directory
@@ -227,10 +228,10 @@ class SnapshotStoreSpec extends SparkSpec {
 
   test("a successful publish sweeps crashed attempts' staging debris") {
     val base = Files.createTempDirectory("snapg").toString + "/t"
-    SnapshotStore.publish(Seq((1L, "a")).toDF("id", "s"), base, 1L)
+    SnapshotStore.publish(spark, base, 1L)(() => Seq((1L, "a")).toDF("id", "s"))
     val debris = new java.io.File(base, "_staging_v=9-deadbeef")
     assert(debris.mkdirs())
-    SnapshotStore.publish(Seq((2L, "b")).toDF("id", "s"), base, 2L)
+    SnapshotStore.publish(spark, base, 2L)(() => Seq((2L, "b")).toDF("id", "s"))
     assert(!debris.exists(), "stale staging must be swept under the lease")
     assert(SnapshotStore.latestVersion(spark, base) === Some(2L))
   }
@@ -240,9 +241,8 @@ class SnapshotStoreSpec extends SparkSpec {
     val slow = udf { (i: Long) => Thread.sleep(7000L); i }
     @volatile var slowFailed: Option[Throwable] = None
     val t = new Thread(null, () => {
-      try SnapshotStore.publish(
-        spark.range(2).repartition(2).select(slow($"id").as("id")),
-        base, 1L, lockLeaseMs = 4000L)
+      try SnapshotStore.publish(spark, base, 1L, lockLeaseMs = 4000L)(() =>
+        spark.range(2).repartition(2).select(slow($"id").as("id")))
       catch { case e: Throwable => slowFailed = Some(e) }
     }, "slow-writer")
     t.start()
@@ -252,8 +252,8 @@ class SnapshotStoreSpec extends SparkSpec {
     // stays within one beat period (~1s) — a 3s margin against CI stalls —
     // and the live lock wins the conflict.
     val ex = intercept[SnapshotStore.ConcurrentPublishException] {
-      SnapshotStore.publish(Seq((9L, "x")).toDF("id", "s"), base, 2L,
-        lockLeaseMs = 4000L)
+      SnapshotStore.publish(spark, base, 2L,
+        lockLeaseMs = 4000L)(() => Seq((9L, "x")).toDF("id", "s"))
     }
     assert(ex.getMessage.contains("another writer holds"))
     t.join()
@@ -265,7 +265,7 @@ class SnapshotStoreSpec extends SparkSpec {
     val base = Files.createTempDirectory("snapc").toString + "/t"
     val outcomes = (10L to 11L).map { v =>
       val t = new Thread(null, () => {
-        try SnapshotStore.publish(Seq((v, s"v$v")).toDF("id", "s"), base, v)
+        try SnapshotStore.publish(spark, base, v)(() => Seq((v, s"v$v")).toDF("id", "s"))
         catch { case _: SnapshotStore.ConcurrentPublishException => () }
       }, s"writer-$v")
       t.start(); t

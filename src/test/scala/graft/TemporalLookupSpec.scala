@@ -15,8 +15,8 @@ class TemporalLookupSpec extends SparkSpec {
   test("each batch joins one pinned dim version; upgrades land at batch edges") {
     val base = Files.createTempDirectory("tlk").toString
     val store = s"$base/dim"
-    SnapshotStore.publish(
-      Seq((1L, "bronze"), (2L, "silver")).toDF("user_id", "tier"), store, 1L)
+    SnapshotStore.publish(spark, store, 1L)(() =>
+      Seq((1L, "bronze"), (2L, "silver")).toDF("user_id", "tier"))
 
     val input = MemoryStream[(Long, Long)]
     val out = collection.mutable.ArrayBuffer.empty[(Long, Long, Option[String], Long)]
@@ -40,9 +40,8 @@ class TemporalLookupSpec extends SparkSpec {
         "unknown key keeps left-join semantics")
 
       // dim upgrade between batches: user 1 promoted, user 3 appears
-      SnapshotStore.publish(
-        Seq((1L, "gold"), (2L, "silver"), (3L, "bronze")).toDF("user_id", "tier"),
-        store, 2L)
+      SnapshotStore.publish(spark, store, 2L)(() =>
+        Seq((1L, "gold"), (2L, "silver"), (3L, "bronze")).toDF("user_id", "tier"))
       out.clear()
       input.addData((13L, 1L), (14L, 3L))
       q.processAllAvailable()

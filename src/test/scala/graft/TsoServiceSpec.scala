@@ -35,7 +35,8 @@ class TsoServiceSpec extends SparkSpec {
       tso.abort(t1)
       assert(tso.safePoint() === t2.ts)
       // the TCP view and a direct file view agree: same oracle
-      assert(TimestampOracle.safePoint(spark, root) === t2.ts)
+      assert(TimestampOracle.safePoint(hconf, root,
+        TimestampOracle.DefaultLeaseMs) === t2.ts)
       assert(tso.gc() === t2.ts)
       assert(tso.begin().ts === t2.ts + 1)
     }
@@ -194,9 +195,9 @@ class TsoServiceSpec extends SparkSpec {
         new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
       def writer(table: String, rounds: Int): Thread = new Thread(() =>
         try (1 to rounds).foreach { i =>
-          val e = TimestampOracle.publishGlobalVia(
-            tso, spark, root, table, keep = 10)(
-            () => Seq((table, i)).toDF("t", "round"))
+          val e = TimestampOracle.publish(tso, spark, root,
+            Seq(table -> (() => Seq((table, i)).toDF("t", "round"))),
+            keep = 10)
           epochs.add((table, e))
         } catch { case t: Throwable => errs.add(t) })
       val ws = Seq(writer("x", 4), writer("y", 4))
@@ -215,14 +216,14 @@ class TsoServiceSpec extends SparkSpec {
       assert(before("x") === Seq(("x", 4)) && before("y") === Seq(("y", 4)))
       // later traffic through the SAME network oracle moves the safe
       // point but never the pinned view
-      TimestampOracle.publishGlobalVia(tso, spark, root, "x", keep = 10)(
-        () => Seq(("x", 99)).toDF("t", "round"))
+      TimestampOracle.publish(tso, spark, root,
+        Seq("x" -> (() => Seq(("x", 99)).toDF("t", "round"))), keep = 10)
       assert(cut(pin) === before)
       assert(tso.safePoint() === 9L)
 
       // 2PC fan-out stamped by the network coordinator: one timestamp,
       // both tables, all-or-nothing at the pin
-      val t2 = TimestampOracle.publishAllGlobalVia(tso, spark, root, Seq(
+      val t2 = TimestampOracle.publish(tso, spark, root, Seq(
         "x" -> (() => Seq(("x", 100)).toDF("t", "round")),
         "y" -> (() => Seq(("y", 100)).toDF("t", "round"))))
       assert(SnapshotStore.versions(spark, s"$root/x").max === t2)
@@ -232,7 +233,7 @@ class TsoServiceSpec extends SparkSpec {
       assert(atFan("x").nonEmpty && atFan("y").nonEmpty) // pre-fan epochs
       // a failed fan-out aborts its NETWORK timestamp; safe point moves on
       intercept[RuntimeException] {
-        TimestampOracle.publishAllGlobalVia(tso, spark, root, Seq(
+        TimestampOracle.publish(tso, spark, root, Seq(
           "x" -> (() => Seq(("x", 101)).toDF("t", "round")),
           "y" -> (() => throw new RuntimeException("boom"))))
       }
